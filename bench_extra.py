@@ -236,20 +236,11 @@ def cmd_plans(args) -> None:
     sf_dir = args.sf or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     kg, kg_m = bench_mod.build_graph(spark, sf_dir, None)
     n = kg.graph.vertices.count()
-    m = kg.graph.edges.count()
     pg = prepare_graph(kg.graph)
+    m = pg.pr_st.rows  # = the edge count, carried from the table write
     os.makedirs(args.out, exist_ok=True)
 
-    # dump the loop plans under the SAME session conf the superstep
-    # loops run with (scoped AQE suppression + size-derived shuffle
-    # partitions below the row bound; a no-op above it) so the artifact
-    # matches what actually executes
-    from contextlib import ExitStack
-
-    from essentials_spark.engine.superstep import superstep_conf, superstep_fast_regime
-
-    loop_conf = ExitStack()
-    loop_conf.enter_context(superstep_conf(spark, work_rows=m))
+    from essentials_spark.engine.superstep import SuperstepRunner
 
     def dump(name, df):
         path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
@@ -259,82 +250,86 @@ def cmd_plans(args) -> None:
             ))
         print(f"wrote {path}")
 
-    # pagerank: one spread superstep over the prepared weighted table
-    edges_w = pg.pr_st.df
-    cur = kg.graph.vertices.select(
-        "vid", F.lit(False).alias("dangling"), F.lit(1.0 / n).alias("rank")
-    )
-    msgs = (
-        edges_w.join(hint_state_join(cur.select(F.col("vid").alias("src"), "rank"), n), "src")
-        .groupBy("dst")
-        .agg(F.sum(F.col("rank") * F.col("coef")).alias("contrib"))
-    )
-    joined = cur.select("vid", "dangling", F.col("rank").alias("plast")).join(
-        msgs.withColumnRenamed("dst", "vid"), "vid", "left"
-    )
-    if superstep_fast_regime(m):
-        # fast-regime shape: the dangling sum enters as a literal
-        # collected with the previous superstep's error check — no
-        # in-plan 1-row aggregate, no broadcast-exchange job
-        step = joined.select(
-            "vid", "dangling",
-            (F.lit((0.15 + 0.0) / float(n)) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
-            "plast",
+    # dump the loop plans under the SAME loop scope the superstep loops
+    # run in (scoped AQE suppression + size-derived shuffle partitions
+    # below the row bound; a no-op above it) so the artifact matches
+    # what actually executes; the scope restores the conf on any exit
+    with SuperstepRunner(spark, "plans").loop(work_rows=m) as small:
+        # pagerank: one spread superstep over the prepared weighted table
+        edges_w = pg.pr_st.df
+        cur = kg.graph.vertices.select(
+            "vid", F.lit(False).alias("dangling"), F.lit(1.0 / n).alias("rank")
         )
-    else:
-        dsum_df = cur.agg((F.lit(0.85) * F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(F.lit(0.0)))).alias("_dsum"))
-        step = (
-            joined
-            .crossJoin(F.broadcast(dsum_df))
-            .select(
+        msgs = (
+            edges_w.join(hint_state_join(cur.select(F.col("vid").alias("src"), "rank"), n), "src")
+            .groupBy("dst")
+            .agg(F.sum(F.col("rank") * F.col("coef")).alias("contrib"))
+        )
+        joined = cur.select("vid", "dangling", F.col("rank").alias("plast")).join(
+            msgs.withColumnRenamed("dst", "vid"), "vid", "left"
+        )
+        if small:
+            # fast-regime shape: the dangling sum enters as a literal
+            # collected with the previous superstep's error check — no
+            # in-plan 1-row aggregate, no broadcast-exchange job
+            step = joined.select(
                 "vid", "dangling",
-                ((F.lit(0.15) + F.col("_dsum")) / F.lit(float(n)) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
+                (F.lit((0.15 + 0.0) / float(n)) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
                 "plast",
             )
+        else:
+            dsum_df = cur.agg((F.lit(0.85) * F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(F.lit(0.0)))).alias("_dsum"))
+            step = (
+                joined
+                .crossJoin(F.broadcast(dsum_df))
+                .select(
+                    "vid", "dangling",
+                    ((F.lit(0.15) + F.col("_dsum")) / F.lit(float(n)) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
+                    "plast",
+                )
+            )
+        dump("pagerank_superstep", step)
+
+        # cc: one hash-min round (general shape) over the shared sym table
+        edges = pg.sym_st.df
+        labels = kg.graph.vertices.select("vid", F.col("vid").alias("label"))
+        msgs = (
+            edges.join(hint_state_join(labels.select(F.col("vid").alias("src"), "label"), n), "src")
+            .groupBy("dst").agg(F.min("label").alias("nbr_min")).withColumnRenamed("dst", "vid")
         )
-    dump("pagerank_superstep", step)
+        cand = labels.join(msgs, "vid", "left").select(
+            "vid", F.least(F.col("label"), F.col("nbr_min")).alias("cand"), F.col("label").alias("old")
+        )
+        hook = (
+            cand.groupBy(F.col("old").alias("root")).agg(F.min("cand").alias("hmin"))
+            .select("root", F.least(F.col("root"), F.col("hmin")).alias("hmin"))
+        )
+        lookup = labels.select(F.col("vid").alias("cand"), F.col("label").alias("jump"))
+        round1 = (
+            cand.join(hook.withColumnRenamed("root", "old"), "old", "left")
+            .select("vid", "old", F.least(F.col("cand"), F.col("hmin")).alias("cand"))
+            .join(hook.withColumnRenamed("root", "cand").withColumnRenamed("hmin", "hmin2"), "cand", "left")
+            .select("vid", "old", F.least(F.col("cand"), F.col("hmin2")).alias("cand"))
+            .join(lookup, "cand", "left")
+            .select("vid", F.least(F.col("cand"), F.col("jump")).alias("label"), "old")
+        )
+        dump("cc_round", round1)
 
-    # cc: one hash-min round (general shape) over the shared sym table
-    edges = pg.sym_st.df
-    labels = kg.graph.vertices.select("vid", F.col("vid").alias("label"))
-    msgs = (
-        edges.join(hint_state_join(labels.select(F.col("vid").alias("src"), "label"), n), "src")
-        .groupBy("dst").agg(F.min("label").alias("nbr_min")).withColumnRenamed("dst", "vid")
-    )
-    cand = labels.join(msgs, "vid", "left").select(
-        "vid", F.least(F.col("label"), F.col("nbr_min")).alias("cand"), F.col("label").alias("old")
-    )
-    hook = (
-        cand.groupBy(F.col("old").alias("root")).agg(F.min("cand").alias("hmin"))
-        .select("root", F.least(F.col("root"), F.col("hmin")).alias("hmin"))
-    )
-    lookup = labels.select(F.col("vid").alias("cand"), F.col("label").alias("jump"))
-    round1 = (
-        cand.join(hook.withColumnRenamed("root", "old"), "old", "left")
-        .select("vid", "old", F.least(F.col("cand"), F.col("hmin")).alias("cand"))
-        .join(hook.withColumnRenamed("root", "cand").withColumnRenamed("hmin", "hmin2"), "cand", "left")
-        .select("vid", "old", F.least(F.col("cand"), F.col("hmin2")).alias("cand"))
-        .join(lookup, "cand", "left")
-        .select("vid", F.least(F.col("cand"), F.col("jump")).alias("label"), "old")
-    )
-    dump("cc_round", round1)
+        # lp: one full-shape mode round
+        joined = edges.join(hint_state_join(labels.select(F.col("vid").alias("src"), "label"), n), "src")
+        counts = joined.groupBy("dst", "label").agg(F.count("*").alias("cnt"))
+        best = (
+            counts.groupBy("dst")
+            .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("top"))
+            .select(F.col("dst").alias("vid"), (-F.col("top.neg")).alias("new_label"))
+        )
+        lp_round = labels.join(best, "vid", "left").select(
+            "vid", F.coalesce(F.col("new_label"), F.col("label")).alias("label"), F.col("label").alias("old")
+        )
+        dump("lp_round", lp_round)
 
-    # lp: one full-shape mode round
-    joined = edges.join(hint_state_join(labels.select(F.col("vid").alias("src"), "label"), n), "src")
-    counts = joined.groupBy("dst", "label").agg(F.count("*").alias("cnt"))
-    best = (
-        counts.groupBy("dst")
-        .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("top"))
-        .select(F.col("dst").alias("vid"), (-F.col("top.neg")).alias("new_label"))
-    )
-    lp_round = labels.join(best, "vid", "left").select(
-        "vid", F.coalesce(F.col("new_label"), F.col("label")).alias("label"), F.col("label").alias("old")
-    )
-    dump("lp_round", lp_round)
-
-    # tc runs OUTSIDE the loop conf (one-shot join pipeline — AQE's
+    # tc runs OUTSIDE the loop scope (one-shot join pipeline — AQE's
     # runtime broadcast conversion is a measured ~2x win there)
-    loop_conf.close()
 
     # tc: the full (lazy) corner-count plan on the membership graph
     sym_m = truncate_plan(

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from essentials_spark.engine.static_table import prepare_static_edges
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph
 
 
@@ -68,11 +68,13 @@ def betweenness_centrality(
     spark = graph.edges.sparkSession
     runner = runner or SuperstepRunner(spark, "bc")
     e = graph.edges.select("src", "dst")
-    edges = prepare_static_edges(e, runner, keys="src", mode=edges_mode, name_hint="bc_fwd")
-    edges_rev = edges if symmetric else prepare_static_edges(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-        runner, keys="src", mode=edges_mode, name_hint="bc_rev",
-    )
+    edges, m = prepare_static_edges(e, runner, keys="src", mode=edges_mode, name_hint="bc_fwd")
+    edges_rev = edges
+    if not symmetric:
+        edges_rev, _ = prepare_static_edges(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            runner, keys="src", mode=edges_mode, name_hint="bc_rev",
+        )
 
     if sources is None:
         # bounded deterministic sample — never a full-vertex collect
@@ -86,8 +88,9 @@ def betweenness_centrality(
         ).persist()
     ]
     depth = 0
-    m_work = edges.count() * max(1, len(sources))
-    with superstep_conf(spark, work_rows=m_work):
+    # one scope for the forward loop, the delta init and the backward
+    # loop: the delta init between them is loop-scale work too
+    with runner.loop(work_rows=m * max(1, len(sources))):
         while depth < max_iter:
             frontier = levels[depth]
             msgs = (
@@ -114,14 +117,13 @@ def betweenness_centrality(
             levels.append(new)
             depth += 1
 
-    max_depth = len(levels) - 1
+        max_depth = len(levels) - 1
 
-    # ---- backward: per-level dependency accumulation, deepest first.
-    # Each finalized (seed, vid, delta) level appends to the output
-    # list; a backward round touches ONLY levels d and d-1.
-    delta = truncate_plan(levels[max_depth].withColumn("delta", F.lit(0.0))).persist()
-    finalized: list[DataFrame] = []
-    with superstep_conf(spark, work_rows=m_work):
+        # ---- backward: per-level dependency accumulation, deepest first.
+        # Each finalized (seed, vid, delta) level appends to the output
+        # list; a backward round touches ONLY levels d and d-1.
+        delta = truncate_plan(levels[max_depth].withColumn("delta", F.lit(0.0))).persist()
+        finalized: list[DataFrame] = []
         for d in range(max_depth, 0, -1):
             succ = delta.select(
                 "seed", F.col("vid").alias("src"), F.col("sigma").alias("wsigma"), F.col("delta").alias("wdelta")
@@ -167,8 +169,7 @@ def betweenness_centrality(
         .join(graph.vertices.select("vid"), "vid", "right")
         .select("vid", F.coalesce(F.col("bc"), F.lit(0.0)).alias("bc"))
     )
-    runner.finalize()
-    return out
+    return runner.finalize(out)
 
 
 def betweenness_centrality_contracted(
@@ -216,14 +217,14 @@ def betweenness_centrality_contracted(
     ctr = chain_contraction(
         graph.vertices, graph.edges.select("src", "dst"), keep=seeds_df
     )
-    sedges = prepare_static_edges(
+    sedges, m = prepare_static_edges(
         ctr.super_edges.select("src", "dst", F.col("hops").cast("double").alias("w"), "chain_id"),
         runner, keys="src", mode=edges_mode, name_hint="bcc_edges",
     )
 
-    # scoped loop conf for all three chained fixpoint loops (the
-    # inter-loop DAG builds are loop-scale too); no-op above the bound
-    with superstep_conf(spark, work_rows=sedges.count() * max(1, len(sources))):
+    # one loop scope for all three chained fixpoint loops (the
+    # inter-loop DAG builds are loop-scale too)
+    with runner.loop(work_rows=m * max(1, len(sources))):
         # ---- phase 1: seeded multi-source weighted relax (dist) ----
         dist = truncate_plan(
             seeds_df.select(F.col("vid").alias("seed"), "vid", F.lit(0.0).alias("dist"))
@@ -438,5 +439,4 @@ def betweenness_centrality_contracted(
         .join(graph.vertices.select("vid"), "vid", "right")
         .select("vid", F.coalesce(F.col("bc"), F.lit(0.0)).alias("bc"))
     )
-    runner.finalize()
-    return out
+    return runner.finalize(out)

@@ -38,7 +38,7 @@ from essentials_spark.engine.static_table import (
     hint_state_join,
     prepare_static_edges,
 )
-from essentials_spark.engine.superstep import SuperstepRunner, edge_fingerprint, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, edge_fingerprint, truncate_plan
 from essentials_spark.graph.derive import Graph, canonicalize_edges
 
 
@@ -246,8 +246,7 @@ def connected_components_contract(
                 out = out.persist()
                 out.count()
             runner.log(0, phase="resume", resumed="done")
-            runner.finalize()
-            return out
+            return runner.finalize(out)
         if meta0.get("phase") == "contract":
             rmin = df0.filter(F.col("kind") == 0).select(
                 F.col("a").alias("vid"), F.col("b").alias("r")
@@ -475,8 +474,7 @@ def _contract_phase23(
         labels2.unpersist()
     except Exception:
         pass
-    runner.finalize()
-    return out
+    return runner.finalize(out)
 
 
 def connected_components(
@@ -490,6 +488,7 @@ def connected_components(
     kernel: str = "dataframe",
     n_buckets: int | None = None,
     small_round_max: int | None = None,
+    edge_rows: int | None = None,
 ) -> DataFrame:
     """Returns (vid: long, label: long) — label = min vid in component.
 
@@ -510,22 +509,22 @@ def connected_components(
     localCheckpoint blocks, which ContextCleaner reaps once the caller
     drops the DataFrame — unlike CacheManager entries, which live until
     an explicit unpersist. Pipelines that call CC repeatedly in one
-    session (dedup clustering) use this to avoid cache accumulation."""
+    session (dedup clustering) use this to avoid cache accumulation.
+    ``edge_rows``: the known edge count for edges_mode='prepared'."""
     spark = graph.edges.sparkSession
     runner = runner or SuperstepRunner(spark, "cc")
 
     edges = graph.edges if pre_symmetrized else canonicalize_edges(
         graph.edges, symmetrize=True, dedup=True, drop_self_loops=True
     )
-    edges = prepare_static_edges(edges.select("src", "dst"), runner, keys="src", mode=edges_mode, name_hint="cc")
-    m = edges.count()
+    edges, m = prepare_static_edges(edges.select("src", "dst"), runner, mode=edges_mode, rows=edge_rows, name_hint="cc")
 
     blocks = None
     if kernel == "csr":
         from essentials_spark.graph.csr_blocks import build_csr_blocks, csr_min_push
 
         n_buckets = n_buckets or spark.sparkContext.defaultParallelism
-        blocks = prepare_static_edges(
+        blocks, _ = prepare_static_edges(
             build_csr_blocks(edges.withColumn("coef", F.lit(1.0)), n_buckets),
             runner, keys="bucket", n_buckets=n_buckets, name_hint="cc_blocks",
         )
@@ -703,7 +702,7 @@ def connected_components(
     # reference their predecessor 3x, so the ceiling is lower)
     fused_iters = min(fused_iters, 4)
     front_rows = n
-    with superstep_conf(spark, work_rows=m):
+    with runner.loop(work_rows=m):
         while not converged and iteration < max_iter:
             # never fuse small (broadcast-shape) rounds: each references its
             # predecessor through several broadcast branches, and nesting
@@ -763,11 +762,7 @@ def connected_components(
                 prev.unpersist()
                 break
 
-    out = labels.select("vid", "label")
-    runner.finalize()
+    out = runner.finalize(labels.select("vid", "label"))
     if not persist_result:
-        try:
-            labels.unpersist()
-        except Exception:
-            pass
+        labels.unpersist()
     return out

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from essentials_spark.engine.static_table import hint_state_join, prepare_static_edges
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph, canonicalize_edges
 
 
@@ -31,15 +31,17 @@ def color(
     runner: SuperstepRunner | None = None,
     pre_symmetrized: bool = False,
     edges_mode: str = "bucketed",
+    edge_rows: int | None = None,
 ) -> DataFrame:
     """Returns (vid: long, color: int); valid coloring (no edge joins
-    two equal colors). Isolated vertices get color 0."""
+    two equal colors). Isolated vertices get color 0. ``edge_rows``:
+    the known edge count for edges_mode='prepared'."""
     spark = graph.edges.sparkSession
     runner = runner or SuperstepRunner(spark, "color")
     edges = graph.edges if pre_symmetrized else canonicalize_edges(
         graph.edges, symmetrize=True, dedup=True, drop_self_loops=True
     )
-    edges = prepare_static_edges(edges.select("src", "dst"), runner, keys="src", mode=edges_mode, name_hint="color")
+    edges, m = prepare_static_edges(edges.select("src", "dst"), runner, mode=edges_mode, rows=edge_rows, name_hint="color")
 
     # deterministic priority per vertex; ties impossible via (hash, vid)
     prio = F.xxhash64(F.col("vid"), F.lit(seed))
@@ -47,8 +49,7 @@ def color(
     colored = spark.createDataFrame([], "vid long, color int")
 
     it = 0
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=edges.count()):
+    with runner.loop(work_rows=m):
         while it < max_iter:
             n_left = uncolored.count()
             if n_left == 0:
@@ -100,5 +101,4 @@ def color(
             it += 1
             runner.log(it, colored=newly.count(), remaining=n_left)
 
-    runner.finalize()
-    return colored
+    return runner.finalize(colored)

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 
 
 def densest_subgraph(
@@ -63,8 +63,7 @@ def densest_subgraph(
     m = cur_e.count()
     best_v, best_n, best_m = cur_v, n, m
 
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=m):
+    with runner.loop(work_rows=m):
         for it in range(1, max_iter + 1):
             if n == 0 or m == 0:
                 break
@@ -105,9 +104,10 @@ def densest_subgraph(
                     best_v.unpersist()
                 best_v, best_n, best_m = cur_v, n, m
 
-    runner.finalize()
-    return best_v.select(
-        "vid",
-        F.lit(int(best_n)).cast("long").alias("n_sub"),
-        F.lit(int(best_m)).cast("long").alias("m_sub"),
+    return runner.finalize(
+        best_v.select(
+            "vid",
+            F.lit(int(best_n)).cast("long").alias("n_sub"),
+            F.lit(int(best_m)).cast("long").alias("m_sub"),
+        )
     )

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from essentials_spark.engine.static_table import hint_state_join, prepare_static_edges
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph
 
 
@@ -38,20 +38,16 @@ def eigenvector_centrality(
     mode, matching q_pagerank's convention)."""
     spark = graph.edges.sparkSession
     runner = runner or SuperstepRunner(spark, "eigen")
-    edges = prepare_static_edges(
+    edges, m = prepare_static_edges(
         graph.edges.select("src", "dst"), runner, keys="src", mode=edges_mode,
         name_hint="eigen",
     )
     n = graph.vertices.count()
-    m = graph.edges.count()
     state = truncate_plan(
         graph.vertices.select("vid", F.lit(1.0).alias("score"))
     ).persist()
 
-    # scoped loop conf (engine/superstep.py): below the known-row bound
-    # AQE replanning is pure driver overhead and partitions derive from
-    # the edge count; above it this is a no-op and AQE stays on
-    with superstep_conf(spark, work_rows=m):
+    with runner.loop(work_rows=m):
         for it in range(1, max_iter + 1):
             raw = (
                 edges.join(
@@ -89,8 +85,7 @@ def eigenvector_centrality(
             if err is not None and err < tol:
                 break
 
-    runner.finalize()
-    return state
+    return runner.finalize(state)
 
 
 def katz_centrality(
@@ -117,18 +112,16 @@ def katz_centrality(
     """
     spark = graph.edges.sparkSession
     runner = runner or SuperstepRunner(spark, "katz")
-    edges = prepare_static_edges(
+    edges, m = prepare_static_edges(
         graph.edges.select("src", "dst"), runner, keys="src", mode=edges_mode,
         name_hint="katz",
     )
     n = graph.vertices.count()
-    m = graph.edges.count()
     state = truncate_plan(
         graph.vertices.select("vid", F.lit(float(beta)).alias("score"))
     ).persist()
 
-    # scoped loop conf — same gate as eigenvector_centrality above
-    with superstep_conf(spark, work_rows=m):
+    with runner.loop(work_rows=m):
         for it in range(1, max_iter + 1):
             raw = (
                 edges.join(
@@ -157,5 +150,4 @@ def katz_centrality(
             if err is not None and err < tol:
                 break
 
-    runner.finalize()
-    return state
+    return runner.finalize(state)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.functions.geo_math import haversine_km, spherical_midpoint
 from essentials_spark.graph.derive import Graph, canonicalize_edges
 
@@ -157,7 +157,7 @@ def geolocate(
         return _geolocate_contracted(
             graph, known, runner, edges_mode, method, spatial_iters, eps, max_iter
         )
-    edges = prepare_static_edges(
+    edges, m = prepare_static_edges(
         canonicalize_edges(graph.edges, symmetrize=True, dedup=True, drop_self_loops=True).select("src", "dst"),
         runner, keys="src", mode=edges_mode, name_hint="geo",
     )
@@ -186,8 +186,7 @@ def geolocate(
         return int(row or 0)
 
     it = 0
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=edges.count()):
+    with runner.loop(work_rows=m):
         while it < max_iter:
             pushed = (
                 edges.join(
@@ -234,8 +233,7 @@ def geolocate(
             front = new
             front_rows = n_new
 
-    runner.finalize()
-    return located
+    return runner.finalize(located)
 
 
 def _geolocate_contracted(
@@ -299,9 +297,9 @@ def _geolocate_contracted(
     need = deliver.groupBy("vid").agg(F.count(F.lit(1)).alias("needed"))
 
     values = truncate_plan(known.select("vid", "lat", "lon")).persist()
+    n_deliver = deliver.count()
     it = 0
-    # scoped loop conf — no-op above the bound
-    with superstep_conf(deliver.sparkSession, work_rows=deliver.count()):
+    with runner.loop(work_rows=n_deliver):
         while it < max_iter:
             # terminals whose every delivering source is valued, not yet valued
             got = (
@@ -363,5 +361,4 @@ def _geolocate_contracted(
     out = truncate_plan(values.unionByName(interior_vals))
     lv.unpersist()
     deliver.unpersist()
-    runner.finalize()
-    return out
+    return runner.finalize(out)

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from essentials_spark.engine.static_table import hint_state_join, prepare_static_edges
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph
 
 
@@ -31,8 +31,8 @@ def hits(
     # direction ever re-shuffles the static side (CSR + CSC views,
     # reference include/gunrock/graph/{csr,csc}.hxx)
     e = graph.edges.select("src", "dst")
-    edges = prepare_static_edges(e, runner, keys="src", mode=edges_mode, name_hint="hits_fwd")
-    edges_rev = prepare_static_edges(
+    edges, m = prepare_static_edges(e, runner, keys="src", mode=edges_mode, name_hint="hits_fwd")
+    edges_rev, _ = prepare_static_edges(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
         runner, keys="src", mode=edges_mode, name_hint="hits_rev",
     )
@@ -41,8 +41,7 @@ def hits(
     ).persist()
     n = state.count()
 
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=edges.count()):
+    with runner.loop(work_rows=m):
         for it in range(1, max_iter + 1):
             # auth(v) = sum hub(u) over u->v ; then hub(u) = sum auth(v) over u->v
             # adaptive state-join hints (engine/static_table.py): hub/auth
@@ -88,16 +87,11 @@ def hits(
             state.unpersist()
             state = new_state
 
-        # eager truncate BEFORE finalize: the loop issues no per-round
-        # action on its last state, so the return must not re-read the
-        # static tables finalize() drops
-        ranked = truncate_plan(
-            state.withColumns(
-                {
-                    "auth_rank": F.row_number().over(Window.orderBy(F.desc("auth"), "vid")),
-                    "hub_rank": F.row_number().over(Window.orderBy(F.desc("hub"), "vid")),
-                }
-            )
+        ranked = state.withColumns(
+            {
+                "auth_rank": F.row_number().over(Window.orderBy(F.desc("auth"), "vid")),
+                "hub_rank": F.row_number().over(Window.orderBy(F.desc("hub"), "vid")),
+            }
         )
-    runner.finalize()
-    return ranked
+        # inside the scope: the finalize truncation plans under the loop conf
+        return runner.finalize(ranked)

@@ -39,7 +39,7 @@ from essentials_spark.engine.static_table import (
     hint_state_join,
     prepare_static_edges,
 )
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph, canonicalize_edges
 
 
@@ -51,19 +51,21 @@ def kcore(
     edges_mode: str = "bucketed",
     method: str = "hindex",
     fused_iters: int = 4,
+    edge_rows: int | None = None,
 ) -> DataFrame:
     """Returns (vid: long, core: int) for every vertex (0 if isolated).
 
     ``max_k`` caps the reported core VALUE in both methods (peel stops
     at k = max_k and survivors keep it; h-index runs to its fixpoint
     and clamps) — it is NOT an h-index round budget, so the two paths
-    keep identical semantics for any max_k."""
+    keep identical semantics for any max_k. ``edge_rows``: the known
+    edge count for edges_mode='prepared'."""
     if method in ("hindex", "local"):
         if method == "hindex":
             out = kcore_hindex(
                 graph, runner=runner,
                 pre_symmetrized=pre_symmetrized, edges_mode=edges_mode,
-                fused_iters=fused_iters,
+                fused_iters=fused_iters, edge_rows=edge_rows,
             )
         else:
             out = kcore_hindex_local(
@@ -78,7 +80,7 @@ def kcore(
         )
     return kcore_peel(
         graph, max_k=max_k, runner=runner,
-        pre_symmetrized=pre_symmetrized, edges_mode=edges_mode,
+        pre_symmetrized=pre_symmetrized, edges_mode=edges_mode, edge_rows=edge_rows,
     )
 
 
@@ -89,6 +91,7 @@ def kcore_hindex(
     pre_symmetrized: bool = False,
     edges_mode: str = "bucketed",
     fused_iters: int = 4,
+    edge_rows: int | None = None,
 ) -> DataFrame:
     """Neighbor-h-index fixpoint (module docstring). Per round:
 
@@ -108,10 +111,7 @@ def kcore_hindex(
     edges = graph.edges if pre_symmetrized else canonicalize_edges(
         graph.edges, symmetrize=True, dedup=True, drop_self_loops=True
     )
-    edges = prepare_static_edges(
-        edges.select("src", "dst"), runner, keys="src", mode=edges_mode, name_hint="kcoreh"
-    )
-    m = edges.count()
+    edges, m = prepare_static_edges(edges.select("src", "dst"), runner, mode=edges_mode, rows=edge_rows, name_hint="kcoreh")
 
     deg = edges.groupBy("src").agg(F.count("*").alias("deg")).withColumnRenamed("src", "vid")
     # persisted for the per-block message-mass gate (bucketed scan +
@@ -221,8 +221,7 @@ def kcore_hindex(
     # dominant tail cost without fusion.
     fused = min(fused_iters, 4)
     mass_cap = 4 * STATE_BROADCAST_MAX_ROWS
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=m):
+    with runner.loop(work_rows=m):
         while rounds < max_rounds:
             # shape decision from the ACTUAL frontier: row count alone
             # bounds nothing on a power-law graph (one hub makes the
@@ -270,9 +269,7 @@ def kcore_hindex(
             if n_changed == 0:
                 break
 
-    out = state.select("vid", F.col("c").cast("int").alias("core"))
-    runner.finalize()
-    return out
+    return runner.finalize(state.select("vid", F.col("c").cast("int").alias("core")))
 
 
 def kcore_hindex_local(
@@ -426,8 +423,7 @@ def kcore_hindex_local(
         })
 
     rounds = 0
-    # scoped loop conf — no-op above the bound
-    with superstep_conf(spark, work_rows=m):
+    with runner.loop(work_rows=m):
         while rounds < max_rounds:
             local_side = state.select(_bk("vid").alias("bucket"), "vid", "c", F.lit(True).alias("loc"))
             bound_side = cross.join(state, cross.src == state.vid).select(
@@ -447,15 +443,11 @@ def kcore_hindex_local(
             if n_changed == 0:
                 break
 
-        out = state.select("vid", F.col("c").cast("int").alias("core"))
-        runner.finalize()
+        out = runner.finalize(state.select("vid", F.col("c").cast("int").alias("core")))
         blocks.unpersist()
         cross.unpersist()
     if not persist_result:
-        try:
-            state.unpersist()
-        except Exception:
-            pass
+        state.unpersist()
     return out
 
 
@@ -465,6 +457,7 @@ def kcore_peel(
     runner: SuperstepRunner | None = None,
     pre_symmetrized: bool = False,
     edges_mode: str = "bucketed",
+    edge_rows: int | None = None,
 ) -> DataFrame:
     """Reference-parity peeling (kcore.hxx:112-199): returns
     (vid: long, core: int) for every vertex (0 if isolated)."""
@@ -473,7 +466,7 @@ def kcore_peel(
     edges = graph.edges if pre_symmetrized else canonicalize_edges(
         graph.edges, symmetrize=True, dedup=True, drop_self_loops=True
     )
-    edges = prepare_static_edges(edges.select("src", "dst"), runner, keys="src", mode=edges_mode, name_hint="kcore")
+    edges, m = prepare_static_edges(edges.select("src", "dst"), runner, mode=edges_mode, rows=edge_rows, name_hint="kcore")
 
     deg = edges.groupBy("src").agg(F.count("*").alias("deg")).withColumnRenamed("src", "vid")
     state = truncate_plan(
@@ -485,8 +478,7 @@ def kcore_peel(
     peeled: list[DataFrame] = []  # (vid, core) fragments
     it = 0
     k = 1
-    # scoped loop conf — no-op above the bound
-    with superstep_conf(spark, work_rows=edges.count()):
+    with runner.loop(work_rows=m):
         while k <= max_k:
             victims = state.filter(F.col("deg") < k).select("vid")
             n_removed = victims.count()
@@ -520,5 +512,4 @@ def kcore_peel(
     out = survivors
     for frag in peeled:
         out = out.unionByName(frag)
-    runner.finalize()
-    return out
+    return runner.finalize(out)

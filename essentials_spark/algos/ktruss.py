@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph, canonicalize_edges
 
 
@@ -105,12 +105,10 @@ def ktruss(
     und = truncate_plan(und).persist()
     n_prev = und.count()
     if k <= 2 or n_prev == 0:
-        runner.finalize()
-        return und
+        return runner.finalize(und)
     if not delta:
         it = 0
-        # scoped loop conf (engine/superstep.py) — no-op above the bound
-        with superstep_conf(spark, work_rows=n_prev):
+        with runner.loop(work_rows=n_prev):
             while it < max_iter:
                 it += 1
                 sup = edge_support(und)
@@ -128,8 +126,7 @@ def ktruss(
                 if n_keep == n_prev or n_keep == 0:
                     break
                 n_prev = n_keep
-        runner.finalize()
-        return und
+        return runner.finalize(und)
 
     # delta path: one full support pass, then maintain. Edges in no
     # triangle carry sup 0 (edge_support omits them). The support
@@ -149,8 +146,7 @@ def ktruss(
         n_prev = und.count()
         if meta.get("converged") or n_prev == 0:
             sup.unpersist()
-            runner.finalize()
-            return und
+            return runner.finalize(und)
         deg = truncate_plan(
             und.select(F.col("src").alias("vid"))
             .unionByName(und.select(F.col("dst").alias("vid")))
@@ -165,8 +161,7 @@ def ktruss(
         runner.materialize(sup, it_end, force=True, meta={"converged": True, "k": k})
     sup.unpersist()
     deg.unpersist()
-    runner.finalize()
-    return und
+    return runner.finalize(und)
 
 
 def _init_support_state(und: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -209,8 +204,7 @@ def _peel_delta(
     (surviving edges, last global iteration)."""
     n_prev = n_edges
     it = iter_base
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(und.sparkSession, work_rows=n_edges):
+    with runner.loop(work_rows=n_edges):
         while it < iter_base + max_iter:
             it += 1
             drop = truncate_plan(sup.filter(F.col("sup") < k - 2).select("src", "dst")).persist()
@@ -329,8 +323,7 @@ def truss_decomposition(
     n = und.count()
     if n == 0 or (k_max is not None and k_max <= 2):
         out = und.withColumn("trussness", F.lit(min(k_max or 2, 2)).cast("int"))
-        runner.finalize()
-        return out
+        return runner.finalize(out)
     if runner.fingerprint is None:
         runner.fingerprint = f"truss:kmax={k_max}:m={n}"
     pieces: list[DataFrame] = []
@@ -421,5 +414,4 @@ def truss_decomposition(
             df.unpersist()
         except Exception:
             pass
-    runner.finalize()
-    return out
+    return runner.finalize(out)

@@ -222,7 +222,6 @@ def louvain(
     from essentials_spark.engine.superstep import (
         SuperstepRunner,
         edge_fingerprint,
-        superstep_conf,
         truncate_plan,
     )
 
@@ -277,8 +276,8 @@ def louvain(
         it, state, _meta = resumed
         if it <= len(schedule):
             labels, start = state.select("vid", "label"), it
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(g.edges.sparkSession, work_rows=g.edges.count()):
+    m = g.edges.count()
+    with runner.loop(work_rows=m):
         for idx in range(start, len(schedule)):
             r, cls = schedule[idx]
             if mode == "mis":

@@ -57,7 +57,7 @@ from essentials_spark.engine.static_table import (
     hint_state_join,
     prepare_static_edges,
 )
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph, canonicalize_edges
 
 
@@ -74,6 +74,7 @@ def label_propagation(
     n_buckets: int | None = None,
     mode: str = "sync",
     semi_parity: DataFrame | None = None,
+    edge_rows: int | None = None,
 ) -> DataFrame:
     """Returns (vid: long, label: long). Labels init to vid.
     ``persist_result=False`` releases the result's CacheManager pin
@@ -98,7 +99,8 @@ def label_propagation(
     side keeps re-adopting the other's previous labels), so
     convergence-mode LP becomes usable on transcript graphs.
     Deterministic and oracle-replayable; convergence requires TWO
-    consecutive zero-change rounds (one covers only one parity)."""
+    consecutive zero-change rounds (one covers only one parity).
+    ``edge_rows``: the known edge count for edges_mode='prepared'."""
     spark = graph.edges.sparkSession
     runner = runner or SuperstepRunner(spark, "lp")
     semi = mode == "semi"
@@ -108,15 +110,14 @@ def label_propagation(
     edges = graph.edges if pre_symmetrized else canonicalize_edges(
         graph.edges, symmetrize=True, dedup=True, drop_self_loops=True
     )
-    edges = prepare_static_edges(edges.select("src", "dst"), runner, keys="src", mode=edges_mode, name_hint="lp")
-    m = edges.count()
+    edges, m = prepare_static_edges(edges.select("src", "dst"), runner, mode=edges_mode, rows=edge_rows, name_hint="lp")
 
     blocks = None
     if kernel == "csr":
         from essentials_spark.graph.csr_blocks import build_csr_blocks, csr_label_counts
 
         n_buckets = n_buckets or spark.sparkContext.defaultParallelism
-        blocks = prepare_static_edges(
+        blocks, _ = prepare_static_edges(
             build_csr_blocks(edges.withColumn("coef", F.lit(1.0)), n_buckets),
             runner, keys="bucket", n_buckets=n_buckets, name_hint="lp_blocks",
         )
@@ -261,7 +262,7 @@ def label_propagation(
         STATE_BROADCAST_MAX_ROWS // 8 if small_round_max is None else small_round_max
     )
     mass_cap = 4 * STATE_BROADCAST_MAX_ROWS
-    with superstep_conf(spark, work_rows=m):
+    with runner.loop(work_rows=m):
         while not converged and iteration < max_iter:
             # shape decision from the ACTUAL frontier (module docstring).
             # Within a fused block the shape is stale by <k rounds — the 4x
@@ -356,11 +357,7 @@ def label_propagation(
                 prev.unpersist()  # superseded by the eager checkpoint
                 break
 
-    out = labels.select("vid", "label")
-    runner.finalize()
+    out = runner.finalize(labels.select("vid", "label"))
     if not persist_result:
-        try:
-            labels.unpersist()
-        except Exception:
-            pass
+        labels.unpersist()
     return out

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.functions.portable_hash import md5_int60
 
 
@@ -52,8 +52,8 @@ def maximal_independent_set(
     ).persist()
     picked: list[DataFrame] = []
 
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=live_e.count()):
+    m_live = live_e.count()
+    with runner.loop(work_rows=m_live):
         for r in range(1, max_iter + 1):
             n = live_v.count()
             if n == 0:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph, canonicalize_edges
 
 
@@ -220,8 +220,8 @@ def mst(
     chosen_frags: list[DataFrame] = []
 
     it = 0
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=active.count()):
+    m_active = active.count()
+    with runner.loop(work_rows=m_active):
         while it < max_iter:
             it += 1
             n_active = active.count()

@@ -26,13 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from essentials_spark.engine.static_table import hint_state_join, prepare_static_edges
-from essentials_spark.engine.superstep import (
-    SuperstepRunner,
-    superstep_conf,
-    superstep_fast_regime,
-    truncate_plan,
+from essentials_spark.engine.static_table import (
+    adaptive_buckets,
+    hint_state_join,
+    observe_rows,
+    prepare_static_edges,
 )
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph
 
 
@@ -63,6 +63,7 @@ def pagerank(
     static_edges_w: DataFrame | None = None,
     persist_result: bool = True,
     init_ranks: DataFrame | None = None,
+    edge_rows: int | None = None,
 ) -> DataFrame:
     """Returns (vid: long, rank: double).
 
@@ -74,6 +75,7 @@ def pagerank(
     correctness oracle). kernel='csr': spread as vectorized NumPy SpMV
     over packed per-bucket CSR blocks (graph/csr_blocks.py) — the
     vectorized path required by the north rule.
+    ``edge_rows``: the known row count of ``static_edges_w``.
     """
     spark = graph.edges.sparkSession
     runner = runner or SuperstepRunner(spark, "pagerank")
@@ -85,27 +87,27 @@ def pagerank(
         # caller prepared (and owns) the weighted spread table — e.g.
         # one persist_bucketed shared across repeat runs
         edges_w = static_edges_w
+        m = edges_w.count() if edge_rows is None else edge_rows
     else:
         # per-edge spread coefficient iweights[src]*w; truncate the
         # derivation lineage (and reset carried stats — see
         # engine/superstep.truncate_plan): every superstep replans this
-        # subtree otherwise
-        edges_w = truncate_plan(weighted_pagerank_edges(graph, alpha).repartition("src"))
-    m = edges_w.count()
+        # subtree otherwise. The truncation counts the rows.
+        edges_w, obs = observe_rows(weighted_pagerank_edges(graph, alpha).repartition("src"))
+        edges_w = truncate_plan(edges_w)
+        m = obs.get["rows"]
 
     blocks = None
     if kernel == "csr":
         from essentials_spark.graph.csr_blocks import build_csr_blocks, spmv_push
 
         n_buckets = n_buckets or spark.sparkContext.defaultParallelism
-        blocks = prepare_static_edges(
+        blocks, _ = prepare_static_edges(
             build_csr_blocks(edges_w, n_buckets), runner, keys="bucket",
             n_buckets=n_buckets, name_hint="pr_blocks",
         )
     elif kernel == "bucketed" and static_edges_w is None:
-        from essentials_spark.engine.static_table import adaptive_buckets
-
-        edges_w = prepare_static_edges(
+        edges_w, _ = prepare_static_edges(
             edges_w, runner, keys="src",
             n_buckets=n_buckets or adaptive_buckets(spark, m), name_hint="pr",
         )
@@ -205,7 +207,7 @@ def pagerank(
     # 3.3M vertices. 6 is a safe ceiling; truncate_plan resets stats at
     # every block boundary.
     fused_iters = min(fused_iters, 6)
-    # fast regime (gate scale, same bound as the AQE suppression): the
+    # fast regime (a small loop, runner.loop's size gate): the
     # fused block's in-plan dangling-sum broadcasts SERIALIZE — each
     # superstep's 1-row aggregate is a separate broadcast job that must
     # wait for its predecessor, so "one action per block" still pays
@@ -216,8 +218,7 @@ def pagerank(
     # plan as a literal (identical IEEE arithmetic). Convergence is
     # still only acted on at the fused-block cadence, so iteration
     # counts — and therefore results — match the fused path exactly.
-    fast = superstep_fast_regime(m)
-    with superstep_conf(spark, work_rows=m):
+    with runner.loop(work_rows=m) as fast:
         if fast and not converged and iteration < max_iter:
             k_cad = max(1, fused_iters)
             dsum = float(
@@ -288,16 +289,12 @@ def pagerank(
                 break
 
     runner.log(iteration, converged=True, total_edges_processed=m * iteration)
-    out = ranks.select("vid", "rank")
-    runner.finalize()
+    out = runner.finalize(ranks.select("vid", "rank"))
     if not persist_result:
         # data stays in the checkpoint blocks (ContextCleaner-reaped
         # once the caller drops the DataFrame); only the CacheManager
         # pin is released — see algos/cc.py
-        try:
-            ranks.unpersist()
-        except Exception:
-            pass
+        ranks.unpersist()
     return out
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from essentials_spark.engine.static_table import prepare_static_edges
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph
 
 
@@ -40,7 +40,7 @@ def ppr(
     # deg is STATIC: persist once — unpersisted it would be re-aggregated
     # from the raw edge lineage at every reference (3x per iteration)
     deg = graph.edges.groupBy("src").agg(F.count("*").alias("deg")).persist()
-    edges = prepare_static_edges(
+    edges, m = prepare_static_edges(
         graph.edges.select("src", "dst").join(deg, "src"),
         runner, keys="src", mode=edges_mode, name_hint="ppr",
     )
@@ -53,8 +53,7 @@ def ppr(
     ).persist()
 
     it = 0
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=edges.count() * max(1, len(seeds))):
+    with runner.loop(work_rows=m * max(1, len(seeds))):
         while it < max_iter:
             # deg_state feeds the new-state base AND (via active) the
             # spread + absorb branches of the same materialize action —
@@ -100,12 +99,7 @@ def ppr(
             state.unpersist()
             state = new_state
 
-        # eager truncate BEFORE finalize: the final round's state is
-        # persisted lazily (the loop's next-round count never runs), so
-        # an un-materialized return would re-read the es_ppr static
-        # table that finalize() is about to drop
-        out = truncate_plan(
+        # inside the scope: the finalize truncation plans under the loop conf
+        return runner.finalize(
             state.filter(F.col("p") > 0).select("seed", "vid", F.col("p").alias("score"))
         )
-    runner.finalize()
-    return out

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from essentials_spark.engine.static_table import hint_state_join, prepare_static_edges
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph
 
 
@@ -52,11 +52,11 @@ def salsa(
     # rev: (src=v, dst=u, w=1/indeg(v)) — auth pushes back to hubs.
     # Coefficients are static, so they bake into the bucketed tables
     # and rounds shuffle ONLY vertex state.
-    fwd = prepare_static_edges(
+    fwd, m = prepare_static_edges(
         e.join(outdeg, "src").select("src", "dst", "w_out"),
         runner, keys="src", mode=edges_mode, name_hint="salsa_fwd",
     )
-    rev = prepare_static_edges(
+    rev, _ = prepare_static_edges(
         e.join(indeg, "dst").select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w_in"
         ),
@@ -67,8 +67,7 @@ def salsa(
     ).persist()
     n = state.count()
 
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=fwd.count()):
+    with runner.loop(work_rows=m):
         for it in range(1, max_iter + 1):
             auth = (
                 fwd.join(hint_state_join(state.select(F.col("vid").alias("src"), "hub"), n), "src")
@@ -113,9 +112,5 @@ def salsa(
                     "hub_rank": F.row_number().over(Window.orderBy(F.desc("hub"), "vid")),
                 }
             )
-        # eager truncate BEFORE finalize (see hits.py): no per-round
-        # action lands on the last state, so the return must not
-        # re-read the static tables finalize() drops
-        out = truncate_plan(out)
-    runner.finalize()
-    return out
+        # inside the scope: the finalize truncation plans under the loop conf
+        return runner.finalize(out)

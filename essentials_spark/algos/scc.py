@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 
 
 def _min_label_fixpoint(
@@ -434,8 +434,8 @@ def strongly_connected_components(
         if cand is not None:
             cand.unpersist()
         rev_edges = live_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    # scoped loop conf (engine/superstep.py) — no-op above the bound
-    with superstep_conf(spark, work_rows=live_edges.count()):
+    m_live = live_edges.count()
+    with runner.loop(work_rows=m_live):
         for phase in range(max_phases):
             if remaining.count() == 0:
                 break
@@ -483,5 +483,4 @@ def strongly_connected_components(
     out = assigned_parts[0]
     for df in assigned_parts[1:]:
         out = out.unionByName(df)
-    runner.finalize()
-    return out
+    return runner.finalize(out)

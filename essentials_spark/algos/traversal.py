@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from essentials_spark.engine.static_table import prepare_static_edges
-from essentials_spark.engine.superstep import SuperstepRunner, superstep_conf, truncate_plan
+from essentials_spark.engine.superstep import SuperstepRunner, truncate_plan
 from essentials_spark.graph.derive import Graph
 
 
@@ -51,7 +51,7 @@ def _relax_min(
         from essentials_spark.graph.csr_blocks import build_csr_blocks, csr_tropical_push
 
         n_buckets = n_buckets or spark.sparkContext.defaultParallelism
-        blocks = prepare_static_edges(
+        blocks, _ = prepare_static_edges(
             build_csr_blocks(
                 edges_df.select("src", "dst", F.col("weight").cast("double").alias("coef")),
                 n_buckets,
@@ -59,21 +59,18 @@ def _relax_min(
             runner, keys="bucket", n_buckets=n_buckets, name_hint=f"{name_hint}_blocks",
         )
         edges = None
+        # the loop's work is the edges packed into the blocks (the
+        # table's own rows count blocks)
+        m_work = int(blocks.agg(F.sum(F.size("dst_ids"))).collect()[0][0] or 0)
     else:
-        edges = prepare_static_edges(
+        edges, m_work = prepare_static_edges(
             edges_df.select("src", "dst", "weight"), runner, keys="src",
             mode=edges_mode, name_hint=name_hint,
         )
     dist = truncate_plan(seeds.select("vid", F.col("dist").cast("double").alias("dist"))).persist()
     frontier = dist
     iteration = 0
-    # known per-round work bound for the scoped loop conf: the static
-    # table is already written, so the count is a cheap cached scan
-    if blocks is not None:
-        m_work = int(blocks.agg(F.sum(F.size("dst_ids"))).collect()[0][0] or 0)
-    else:
-        m_work = edges.count()
-    with superstep_conf(spark, work_rows=m_work):
+    with runner.loop(work_rows=m_work):
         while iteration < max_iter:
             if blocks is not None:
                 from essentials_spark.graph.csr_blocks import csr_tropical_push
@@ -205,8 +202,7 @@ def bfs(
             contraction=contraction, edges_mode=edges_mode,
             kernel=kernel, n_buckets=n_buckets,
         ).select("vid", F.col("dist").cast("int").alias("dist"))
-        runner.finalize()
-        return out
+        return runner.finalize(out)
     if kernel == "csr":
         # plain BFS on the tropical CSR kernel: min-relax over unit
         # weights IS the hop distance
@@ -216,9 +212,8 @@ def bfs(
             seeds, runner, max_iter=max_iter, name_hint="bfs",
             kernel="csr", n_buckets=n_buckets,
         )
-        runner.finalize()
-        return dist.select("vid", F.col("dist").cast("int").alias("dist"))
-    edges = prepare_static_edges(
+        return runner.finalize(dist.select("vid", F.col("dist").cast("int").alias("dist")))
+    edges, m = prepare_static_edges(
         graph.edges.select("src", "dst"), runner, keys="src", mode=edges_mode, name_hint="bfs"
     )
 
@@ -228,7 +223,7 @@ def bfs(
     frontier = dist.select("vid")
     depth = 0
 
-    with superstep_conf(spark, work_rows=edges.count()):
+    with runner.loop(work_rows=m):
         while depth < max_iter:
             nxt = (
                 edges.join(frontier.withColumnRenamed("vid", "src"), "src")
@@ -249,8 +244,7 @@ def bfs(
             prev.unpersist()
             frontier = new.select("vid")
 
-    runner.finalize()
-    return dist
+    return runner.finalize(dist)
 
 
 def sssp(
@@ -280,15 +274,13 @@ def sssp(
             contraction=contraction, edges_mode=edges_mode,
             kernel=kernel, n_buckets=n_buckets,
         )
-        runner.finalize()
-        return out
+        return runner.finalize(out)
     seeds = spark.createDataFrame([(int(source), 0.0)], "vid long, dist double")
     dist = _relax_min(
         graph.edges, seeds, runner, edges_mode=edges_mode,
         max_iter=max_iter, name_hint="sssp", kernel=kernel, n_buckets=n_buckets,
     )
-    runner.finalize()
-    return dist
+    return runner.finalize(dist)
 
 
 def _default_sources(graph: Graph, n_sample: int) -> list[int]:
@@ -317,7 +309,7 @@ def _seeded_hop_distances(
     ``runner.finalize()``.
     """
     spark = graph.edges.sparkSession
-    edges = prepare_static_edges(
+    edges, m = prepare_static_edges(
         graph.edges.select("src", "dst"), runner, keys="src", mode=edges_mode,
         name_hint=name_hint,
     )
@@ -327,7 +319,7 @@ def _seeded_hop_distances(
     frontier = dist.select("seed", "vid")
     depth = 0
 
-    with superstep_conf(spark, work_rows=edges.count() * max(1, len(sources))):
+    with runner.loop(work_rows=m * max(1, len(sources))):
         while depth < max_iter:
             nxt = (
                 edges.join(frontier.withColumnRenamed("vid", "src"), "src")
@@ -376,8 +368,7 @@ def harmonic_centrality(
         .groupBy("vid")
         .agg(F.sum(F.lit(1.0) / F.col("dist")).alias("harm"))
     )
-    runner.finalize()
-    return out
+    return runner.finalize(out)
 
 
 def closeness_centrality(
@@ -409,8 +400,7 @@ def closeness_centrality(
         F.count("*").cast("long").alias("n_src"),
         F.sum("dist").cast("long").alias("sum_dist"),
     )
-    runner.finalize()
-    return out
+    return runner.finalize(out)
 
 
 def temporal_reachability(
@@ -438,7 +428,7 @@ def temporal_reachability(
     """
     spark = tedges.sparkSession
     runner = runner or SuperstepRunner(spark, "temporal")
-    edges = prepare_static_edges(
+    edges, m = prepare_static_edges(
         tedges.select("src", "dst", "ets"), runner, keys="src", mode=edges_mode,
         name_hint="temporal",
     )
@@ -448,7 +438,7 @@ def temporal_reachability(
     frontier = arr
     it = 0
 
-    with superstep_conf(spark, work_rows=edges.count()):
+    with runner.loop(work_rows=m):
         while it < max_iter:
             msgs = (
                 edges.join(
@@ -477,8 +467,7 @@ def temporal_reachability(
             prev.unpersist()
             frontier = improved
 
-    runner.finalize()
-    return arr.select("vid", F.col("arrival").alias("arrival_us"))
+    return runner.finalize(arr.select("vid", F.col("arrival").alias("arrival_us")))
 
 
 def _seeded_chain_distances(
@@ -508,7 +497,7 @@ def _seeded_chain_distances(
         # a prebuilt artifact must have kept every source terminal —
         # this path has no interior-seed handling (unlike bfs/sssp)
         raise ValueError(f"{caller}: a source is a contracted interior; rebuild the contraction with keep=sources")
-    sedges = prepare_static_edges(
+    sedges, m = prepare_static_edges(
         contraction.super_edges.select("src", "dst", F.col("hops").cast("double").alias("w")),
         runner, keys="src", mode=edges_mode, name_hint="harm_chain",
     )
@@ -519,7 +508,7 @@ def _seeded_chain_distances(
     ).persist()
     frontier = dist
     it = 0
-    with superstep_conf(spark, work_rows=sedges.count() * max(1, len(sources))):
+    with runner.loop(work_rows=m * max(1, len(sources))):
         while it < max_iter:
             cand = (
                 sedges.join(frontier.select("seed", F.col("vid").alias("src"), "dist"), "src")
@@ -587,8 +576,7 @@ def harmonic_centrality_contracted(
         .groupBy("vid")
         .agg(F.sum(F.lit(1.0) / F.col("dist")).alias("harm"))
     )
-    runner.finalize()
-    return out
+    return runner.finalize(out)
 
 
 def closeness_centrality_contracted(
@@ -616,5 +604,4 @@ def closeness_centrality_contracted(
         F.count("*").cast("long").alias("n_src"),
         F.sum("dist").cast("long").alias("sum_dist"),
     )
-    runner.finalize()
-    return out
+    return runner.finalize(out)

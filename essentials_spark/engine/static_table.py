@@ -26,7 +26,7 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Vertex-state rows up to this count broadcast to the static side's
@@ -41,18 +41,26 @@ from pyspark.sql import functions as F
 STATE_BROADCAST_MAX_ROWS = 500_000
 
 
-def adaptive_buckets(spark: SparkSession, rows: int | None, rows_per_bucket: int = 65536) -> int | None:
-    """Size-derived bucket count for a static table whose row count is
-    KNOWN before the write. At scale (rows >= rows_per_bucket x
-    defaultParallelism) this returns defaultParallelism — identical to
-    the previous default — while a gate-scale table gets a handful of
-    buckets so every later scan stage schedules a handful of tasks
-    instead of one per core (guide §2.2/§6: partition by size, not by a
-    constant tuned to the box). None (unknown rows) keeps the caller's
-    default."""
+def adaptive_buckets(spark: SparkSession, rows: int | None) -> int | None:
+    """Size-derived partition count for ``rows`` KNOWN rows: the bucket
+    count of a static table and the shuffle partitions of a small
+    superstep loop (SuperstepRunner.loop). At scale (rows >= 65536 x
+    defaultParallelism) this returns defaultParallelism, while a
+    gate-scale table gets a handful of buckets so every later scan
+    stage schedules a handful of tasks instead of one per core (guide
+    §2.2/§6: partition by size, not by a constant tuned to the box).
+    None (unknown rows) keeps the caller's default."""
     if rows is None:
         return None
-    return max(1, min(spark.sparkContext.defaultParallelism, rows // rows_per_bucket + 1))
+    return max(1, min(spark.sparkContext.defaultParallelism, rows // 65536 + 1))
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter attached: after the first action on the
+    returned frame, ``obs.get["rows"]`` is its exact row count, taken
+    by that action itself (no extra job)."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def hint_state_join(state: DataFrame, n_rows: int | None) -> DataFrame:
@@ -71,21 +79,19 @@ def hint_state_join(state: DataFrame, n_rows: int | None) -> DataFrame:
 @dataclass
 class StaticTable:
     """Handle for a bucketed static table: ``df`` to join against,
-    ``drop()`` when the run finishes."""
+    ``rows`` counted by the write itself, ``drop()`` when the run
+    finishes."""
 
     spark: SparkSession
     table: str
     df: DataFrame
+    rows: int
 
     def drop(self) -> None:
         try:
             self.df.unpersist()
-        except Exception:
-            pass
-        try:
+        finally:
             self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
-        except Exception:
-            pass
 
 
 def persist_bucketed(
@@ -100,7 +106,8 @@ def persist_bucketed(
     One full pass over the data up front buys shuffle-free joins on
     ``keys`` for every later superstep. ``n_buckets`` should track the
     cluster's shuffle parallelism (thousands at 100 TB, each bucket
-    sized to fit executor memory).
+    sized to fit executor memory). The write also counts the rows it
+    writes (``StaticTable.rows``), so no caller re-counts the table.
 
     ``cache`` (default): the bucketed scan is additionally persisted —
     InMemoryTableScan preserves the scan's HashPartitioning (verified
@@ -113,8 +120,9 @@ def persist_bucketed(
     spark = df.sparkSession
     n_buckets = n_buckets or spark.sparkContext.defaultParallelism
     table = f"es_{name_hint}_{uuid.uuid4().hex[:10]}"
+    counted, obs = observe_rows(df)
     (
-        df.write.bucketBy(n_buckets, *keys)
+        counted.write.bucketBy(n_buckets, *keys)
         .sortBy(*keys)
         .mode("errorifexists")
         .format("parquet")
@@ -123,7 +131,7 @@ def persist_bucketed(
     out = spark.table(table)
     if cache:
         out = out.persist()
-    return StaticTable(spark, table, out)
+    return StaticTable(spark, table, out, obs.get["rows"])
 
 
 def reap_stale_tables(
@@ -242,29 +250,36 @@ def prepare_static_edges(
     mode: str = "bucketed",
     n_buckets: int | None = None,
     name_hint: str = "edges",
-) -> DataFrame:
-    """Standard static-edge prep for a superstep loop.
+    rows: int | None = None,
+) -> tuple[DataFrame, int]:
+    """Standard static-edge prep for a superstep loop. Returns
+    ``(df, rows)``: the frame to join against and its row count — the
+    loop's known work size for ``runner.loop(work_rows=...)``.
 
     mode='bucketed' (default, the at-scale configuration): persist as a
-    bucketed table registered for cleanup on ``runner.finalize()``.
+    bucketed table owned by ``runner`` (dropped on
+    ``runner.finalize()``); rows are counted by the write.
     mode='shuffle': plain repartition + lineage truncation (the round-1
     shape; kept for A/B tests and for one-shot algorithms where a
-    table write cannot amortize).
+    table write cannot amortize); rows are counted by the truncation.
     mode='prepared': the caller already persisted this DataFrame with a
     stable ``keys`` partitioning (e.g. one ``persist_bucketed`` shared
     by several algorithms over the same graph — CC and LP both consume
     the symmetrized table, so writing it once in the graph-build phase
     halves the static-side preprocessing); used as-is, caller owns the
-    lifecycle.
+    lifecycle and passes the ``rows`` it knows (counted here only when
+    it does not).
     """
     from essentials_spark.engine.superstep import truncate_plan
 
     if mode == "prepared":
-        return edges
+        return edges, edges.count() if rows is None else rows
     if mode == "bucketed":
         st = persist_bucketed(edges, keys, n_buckets=n_buckets, name_hint=name_hint)
         if runner is not None:
-            runner.defer(st.drop)
-        return st.df
+            runner.own(st)
+        return st.df, st.rows
     keys = [keys] if isinstance(keys, str) else list(keys)
-    return truncate_plan(edges.repartition(*keys))
+    counted, obs = observe_rows(edges.repartition(*keys))
+    out = truncate_plan(counted)
+    return out, obs.get["rows"]

@@ -7,9 +7,16 @@ enactor.hxx:243-254):
     finalize();
 
 becomes a driver-side Python loop where each superstep is one Spark
-job and convergence is a tiny aggregate collect. This module owns the
-three concerns GPU loops never face but 10^12-edge iteration chains
-must (SURVEY.md §7.3):
+job and convergence is a tiny aggregate collect. Algorithms say WHAT
+the loop is, the runner decides HOW:
+
+    edges, m = prepare_static_edges(...)     # rows carried from the write
+    with runner.loop(work_rows=m) as small:  # one scope, one size gate
+        while not converged: ...
+    return runner.finalize(out)              # out never reads a dropped table
+
+The module also owns the three concerns GPU loops never face but
+10^12-edge iteration chains must (SURVEY.md §7.3):
 
 1. **lineage truncation** — iterative DataFrames grow an unbounded
    plan; every ``checkpoint_every`` iterations the state is written to
@@ -20,7 +27,7 @@ must (SURVEY.md §7.3):
    run restarts mid-loop and reproduces identical output;
 3. **metrics/lineage logging** — per-iteration rows (iteration,
    frontier size / delta, wall-clock, edges processed, per-partition
-   row counts) appended to a metrics table.
+   row counts, failed cleanups) appended to a metrics table.
 """
 
 from __future__ import annotations
@@ -36,7 +43,13 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# --- scoped AQE suppression for superstep loops ---------------------
+from essentials_spark.engine.static_table import (
+    STATE_BROADCAST_MAX_ROWS,
+    StaticTable,
+    adaptive_buckets,
+)
+
+# --- the loop scope's size gate -------------------------------------
 # AQE re-optimizes the remaining plan at every shuffle/broadcast stage
 # boundary. A fused superstep block is a DEEP plan with many tiny
 # exchanges, every join already explicitly hinted from KNOWN row
@@ -47,103 +60,27 @@ from pyspark.sql import functions as F
 # (94 -> 25 Spark jobs), cc 11.2 -> 7.3 s (142 -> 59 jobs) with AQE
 # off; one-shot join pipelines (triangle_count) run ~2x FASTER with
 # AQE on (runtime broadcast conversion), so the suppression is scoped
-# to the iterative loops only, never session-global. The cost is
-# plan-depth-driven, not data-driven, so the win holds at any scale;
-# set SPARK_GRAFT_SUPERSTEP_AQE=1 to keep AQE on inside loops (e.g.
-# to let AQE skew-split an unhinted state join on a new cluster).
-_AQE_LOCK = threading.Lock()
-_AQE_STATE: dict[int, list] = {}  # id(session) -> [depth, saved_value]
+# to the iterative loops only (SuperstepRunner.loop), never
+# session-global.
+_LOOP_LOCK = threading.Lock()
+_LOOP_STATE: dict[int, list] = {}  # id(session) -> [depth, saved conf]
+_AQE, _PARTITIONS = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
 
 
-@contextmanager
-def superstep_conf(spark: SparkSession, work_rows: int | None = None):
-    """Disable AQE for the duration of a superstep loop (reentrant,
-    thread-safe, restores the previous value on exit).
-
-    ``work_rows``: the loop's per-superstep edge-scale row bound (the
-    edge count). The suppression is SIZE-GATED: it only fires when
-    every exchange a superstep can issue is broadcast-scale
-    (work_rows <= 4 x STATE_BROADCAST_MAX_ROWS, the same mass bound
-    the shape ladders use) — there AQE's per-stage replanning is pure
-    driver overhead (measured 2.1x on pagerank at sf0.1) while any
-    skew straggler it could fix is bounded by broadcast-scale work.
-    Above the bound AQE stays on: its runtime skew-split of hub-rooted
-    joins is a real win (measured: CC at 3.3M vertices runs 26 s with
-    AQE vs 40 s without). Env knobs: SPARK_GRAFT_SUPERSTEP_AQE=1
-    never suppresses; SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS overrides the
-    bound (0 never suppresses, for cluster A/B)."""
-    if os.environ.get("SPARK_GRAFT_SUPERSTEP_AQE") == "1":
-        yield
-        return
-    from essentials_spark.engine.static_table import STATE_BROADCAST_MAX_ROWS
-
-    bound = int(
-        os.environ.get(
-            "SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", 4 * STATE_BROADCAST_MAX_ROWS
-        )
-    )
-    if work_rows is not None and work_rows > bound:
-        yield
-        return
-    # With AQE suppressed nothing coalesces post-shuffle partitions, so
-    # every tiny superstep stage schedules shuffle.partitions tasks and
-    # the serial broadcast-job chain pays ~100 task launches per job
-    # (profiled round 7: pagerank spent 7.8 of 8.7 s inside broadcast
-    # jobs at sf0.1). Derive the partition count from the KNOWN work
-    # size instead — the deterministic stand-in for AQE's coalescing
-    # (guide §2.2), scale-symmetric: above the row bound AQE stays on
-    # and coalesces adaptively; below it we coalesce by known size.
-    rows_per_part = int(
-        os.environ.get("SPARK_GRAFT_SUPERSTEP_ROWS_PER_PARTITION", 65536)
-    )
-    parallelism = spark.sparkContext.defaultParallelism
-    n_parts = max(1, min(parallelism, (work_rows or bound) // rows_per_part + 1))
-    key = id(spark)
-    with _AQE_LOCK:
-        st = _AQE_STATE.get(key)
-        if st is None:
-            saved = {
-                "spark.sql.adaptive.enabled": spark.conf.get(
-                    "spark.sql.adaptive.enabled", "true"
-                ),
-                "spark.sql.shuffle.partitions": spark.conf.get(
-                    "spark.sql.shuffle.partitions", str(parallelism)
-                ),
-            }
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-            st = _AQE_STATE[key] = [0, saved]
-        st[0] += 1
-    try:
-        yield
-    finally:
-        with _AQE_LOCK:
-            st = _AQE_STATE.get(key)
-            if st is not None:
-                st[0] -= 1
-                if st[0] <= 0:
-                    try:
-                        for k, v in st[1].items():
-                            spark.conf.set(k, v)
-                    finally:
-                        del _AQE_STATE[key]
-
-
-def superstep_fast_regime(work_rows: int | None) -> bool:
-    """True when a loop over ``work_rows`` edge-scale rows runs in the
-    suppressed-AQE fast regime (same gate as :func:`superstep_conf`):
-    fixed per-job driver latency dominates there, so loops may trade
-    plan fusion for fewer serial (broadcast) jobs per superstep."""
-    if os.environ.get("SPARK_GRAFT_SUPERSTEP_AQE") == "1":
+def _small_loop(work_rows: int | None) -> bool:
+    """The one size gate: every exchange of a superstep over
+    ``work_rows`` edge-scale rows is broadcast-scale (<= 4 x
+    STATE_BROADCAST_MAX_ROWS, the shape ladders' mass bound). There
+    AQE's replanning is pure driver overhead (2.1x on pagerank at
+    sf0.1) and any skew it could fix is broadcast-scale; above it AQE's
+    skew-split of hub joins wins (CC at 3.3M vertices: 26 s with AQE,
+    40 s without). An unknown size is never small.
+    SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS overrides the bound (0: every
+    non-empty loop is above it, for cluster A/B)."""
+    if work_rows is None:
         return False
-    from essentials_spark.engine.static_table import STATE_BROADCAST_MAX_ROWS
-
-    bound = int(
-        os.environ.get(
-            "SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", 4 * STATE_BROADCAST_MAX_ROWS
-        )
-    )
-    return work_rows is not None and work_rows <= bound
+    bound = int(os.environ.get("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", 4 * STATE_BROADCAST_MAX_ROWS))
+    return work_rows <= bound
 
 
 def truncate_plan(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -212,27 +149,26 @@ class SuperstepRunner:
         # graph or parameters must not silently restore stale state
         self.fingerprint = fingerprint
         self.metrics: list[dict[str, Any]] = []
-        self._persisted: list[DataFrame] = []
         self._cleanups: list = []
+        self._owned_tables: list[str] = []
         self._last_durable_iter = -1
         self._since_gc = 0
         self.gc_every = 8
-        # truncate lineage every iteration by default: plain persist
-        # between truncations measured slower in practice (recompute on
-        # eviction + replanning outweigh the saved checkpoint job)
-        self.truncate_every = 1
         self._t0 = time.perf_counter()
 
     # --- state materialization -------------------------------------
     def materialize(
         self, df: DataFrame, iteration: int, eager: bool = False, force: bool = False, meta: dict | None = None
     ) -> DataFrame:
-        """Pin the iterate: persist (and periodically truncate lineage).
+        """Pin the iterate and truncate its lineage.
 
         Durable (parquet) every ``checkpoint_every`` iterations or when
         ``force`` (used for the final converged state, so a resumed run
         returns it verbatim instead of running an extra superstep);
-        otherwise localCheckpoint truncates lineage in memory. ``meta``
+        otherwise localCheckpoint truncates lineage in memory (every
+        iteration: plain persist between truncations measured slower —
+        recompute on eviction + replanning outweigh the saved checkpoint
+        job). ``meta``
         (e.g. {'converged': True, 'dsum': ...}) rides along with
         durable checkpoints and is handed back by :meth:`latest`.
         """
@@ -249,11 +185,8 @@ class SuperstepRunner:
                     fh,
                 )
             out = self.spark.read.parquet(path)
-        elif iteration % self.truncate_every == 0:
-            out = truncate_plan(df, eager=eager)
         else:
-            out = df.persist()
-        self._retire_persisted()
+            out = truncate_plan(df, eager=eager)
         # drop py4j refs of superseded iterates, then let ContextCleaner
         # reap their localCheckpoint blocks and shuffle files — without
         # this, hour-long superstep loops accumulate storage until the
@@ -302,13 +235,6 @@ class SuperstepRunner:
             return None
         return it, self.spark.read.parquet(self._ckpt_path(it)), meta
 
-    def _retire_persisted(self) -> None:
-        for old in self._persisted:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        self._persisted = []
 
     # --- metrics ----------------------------------------------------
     def log(self, iteration: int, **kv: Any) -> None:
@@ -338,16 +264,98 @@ class SuperstepRunner:
         df.write.mode("append").parquet(path)
 
     def defer(self, fn) -> None:
-        """Register a cleanup (e.g. dropping a bucketed static table)
-        to run on finalize()."""
+        """Register a cleanup (e.g. unpersisting a static aggregate) to
+        run on finalize()."""
         self._cleanups.append(fn)
 
-    def finalize(self) -> None:
-        self._retire_persisted()
+    def own(self, st: StaticTable) -> None:
+        """Take ownership of a static table: finalize() drops it."""
+        self._owned_tables.append(st.table)
+        self.defer(st.drop)
+
+    @contextmanager
+    def loop(self, work_rows: int | None = None):
+        """The superstep loop scope: ``with runner.loop(work_rows=m) as
+        small:``, ``m`` the per-superstep edge-scale row bound (normally
+        a static table's carried ``rows``). Below the gate
+        (:func:`_small_loop`) AQE is off and shuffle partitions are
+        sized from the known work (static_table.adaptive_buckets — with
+        AQE off nothing coalesces, and ~100-task jobs were 7.8 of 8.7 s
+        of pagerank at sf0.1); above it, or for an unknown size, the
+        conf is untouched. Yields whether the loop is small (fixed job
+        latency dominates: trade plan fusion for fewer serial jobs).
+
+        Reentrant: the outermost small scope's conf holds until it
+        exits, on every exit path. Single-writer contract: the conf is
+        session-global, so only one loop tree may run per SparkSession
+        at a time (a concurrent query on another thread would run under
+        this loop's conf)."""
+        if not _small_loop(work_rows):
+            yield False
+            return
+        spark, key = self.spark, id(self.spark)
+        with _LOOP_LOCK:
+            st = _LOOP_STATE.get(key)
+            if st is None:
+                saved = {k: spark.conf.get(k) for k in (_AQE, _PARTITIONS)}
+                spark.conf.set(_AQE, "false")
+                spark.conf.set(_PARTITIONS, str(adaptive_buckets(spark, work_rows)))
+                st = _LOOP_STATE[key] = [0, saved]
+            st[0] += 1
+        try:
+            yield True
+        finally:
+            with _LOOP_LOCK:
+                st[0] -= 1
+                if st[0] == 0:
+                    del _LOOP_STATE[key]
+                    for k, v in st[1].items():
+                        spark.conf.set(k, v)
+
+    def finalize(self, out: DataFrame | None = None) -> DataFrame | None:
+        """End the run: run the deferred cleanups (dropping the owned
+        static tables) and write metrics. Returns ``out`` self-contained:
+        eagerly truncated first if it would still read an owned table,
+        else as is. A failed cleanup is recorded as a ``cleanup_error``
+        metrics row (a failed drop leaks a table); the rest still run."""
+        if out is not None and self._owned_tables and _reads_tables(out, self._owned_tables):
+            out = truncate_plan(out)
         for fn in self._cleanups:
             try:
                 fn()
-            except Exception:
-                pass
+            except Exception as exc:
+                self.metrics.append(
+                    {"run": self.name, "cleanup": getattr(fn, "__qualname__", repr(fn)), "cleanup_error": repr(exc)}
+                )
         self._cleanups = []
+        self._owned_tables = []
         self.write_metrics()
+        return out
+
+
+def _reads_tables(df: DataFrame, tables: list[str]) -> bool:
+    """Driver-side: would evaluating ``df`` read one of ``tables``? Yes
+    when one is named in the analyzed plan (pre-cache, so also through
+    ``persist()``), or when a LogicalRDD leaf's lineage reaches a file
+    scan without crossing a materialized checkpoint (a lazy
+    ``materialize`` no action has run since; conservatively, any file)."""
+    plan = df._jdf.queryExecution().analyzed()
+    if any(t in plan.toString() for t in tables):
+        return True
+    leaves = plan.collectLeaves()
+    stack = [
+        leaves.apply(i).rdd()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    ]
+    seen = set()
+    while stack:
+        rdd = stack.pop()
+        if rdd.id() in seen or rdd.isCheckpointed():
+            continue
+        seen.add(rdd.id())
+        if rdd.getClass().getSimpleName() == "FileScanRDD":
+            return True
+        deps = rdd.dependencies()
+        stack.extend(deps.apply(i).rdd() for i in range(deps.size()))
+    return False

@@ -12,7 +12,9 @@ algorithm needs, so
 - PageRank's weighted spread table is written ONCE and reused across
   repeat runs (different tol / max_iter / restarts);
 - supersteps shuffle ONLY vertex state (engine/static_table.py), and
-  the preprocessing cost amortizes across every algorithm run.
+  the preprocessing cost amortizes across every algorithm run;
+- each table's row count, taken by its write, is handed to the
+  algorithms as their loop's known work size (no re-count).
 
 Usage::
 
@@ -32,7 +34,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
-from essentials_spark.engine.static_table import StaticTable, persist_bucketed
+from essentials_spark.engine.static_table import StaticTable, adaptive_buckets, persist_bucketed
 from essentials_spark.graph.derive import Graph, canonicalize_edges
 
 
@@ -57,22 +59,24 @@ class PreparedGraph:
         # must use the SAME alpha, so default it here rather than letting
         # pagerank() fall back to its own 0.85
         kwargs.setdefault("alpha", self.alpha)
-        if self.pr_st is not None and kwargs["alpha"] == self.alpha:
-            kwargs.setdefault("static_edges_w", self.pr_st.df)
+        if self.pr_st is not None and kwargs["alpha"] == self.alpha and "static_edges_w" not in kwargs:
+            kwargs.update(static_edges_w=self.pr_st.df, edge_rows=self.pr_st.rows)
         return pagerank(self.graph, **kwargs)
 
     def connected_components(self, **kwargs) -> DataFrame:
         from essentials_spark.algos import connected_components
 
         return connected_components(
-            self.sym_graph, pre_symmetrized=True, edges_mode="prepared", **kwargs
+            self.sym_graph, pre_symmetrized=True, edges_mode="prepared",
+            edge_rows=self.sym_st.rows, **kwargs,
         )
 
     def label_propagation(self, **kwargs) -> DataFrame:
         from essentials_spark.algos import label_propagation
 
         return label_propagation(
-            self.sym_graph, pre_symmetrized=True, edges_mode="prepared", **kwargs
+            self.sym_graph, pre_symmetrized=True, edges_mode="prepared",
+            edge_rows=self.sym_st.rows, **kwargs,
         )
 
     def triangle_count(self):
@@ -83,20 +87,28 @@ class PreparedGraph:
     def kcore(self, **kwargs) -> DataFrame:
         from essentials_spark.algos import kcore
 
-        return kcore(self.sym_graph, pre_symmetrized=True, edges_mode="prepared", **kwargs)
+        return kcore(
+            self.sym_graph, pre_symmetrized=True, edges_mode="prepared",
+            edge_rows=self.sym_st.rows, **kwargs,
+        )
 
     def color(self, **kwargs) -> DataFrame:
         from essentials_spark.algos import color
 
-        return color(self.sym_graph, pre_symmetrized=True, edges_mode="prepared", **kwargs)
+        return color(
+            self.sym_graph, pre_symmetrized=True, edges_mode="prepared",
+            edge_rows=self.sym_st.rows, **kwargs,
+        )
 
     def close(self) -> None:
         if self._closed:
             return
         self._closed = True
-        self.sym_st.drop()
-        if self.pr_st is not None:
-            self.pr_st.drop()
+        try:
+            self.sym_st.drop()
+        finally:
+            if self.pr_st is not None:
+                self.pr_st.drop()
 
     def __enter__(self) -> "PreparedGraph":
         return self
@@ -121,12 +133,7 @@ def prepare_graph(
         # this count is a cached-RDD scan, not a recompute; the bucket
         # count then tracks table size instead of the local core count
         # (at scale it resolves to defaultParallelism as before)
-        from essentials_spark.engine.static_table import adaptive_buckets
-
-        try:
-            n_buckets = adaptive_buckets(graph.edges.sparkSession, graph.edges.count())
-        except Exception:
-            n_buckets = None
+        n_buckets = adaptive_buckets(graph.edges.sparkSession, graph.edges.count())
     sym = canonicalize_edges(graph.edges, symmetrize=True, dedup=True, drop_self_loops=True)
     sym_st = persist_bucketed(sym.select("src", "dst"), "src", n_buckets=n_buckets, name_hint="pg_sym")
     pr_st = None

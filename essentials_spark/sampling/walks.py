@@ -199,15 +199,15 @@ def random_walks(
             from essentials_spark.graph.csr_blocks import build_csr_blocks
 
             n_buckets = n_buckets or spark.sparkContext.defaultParallelism
-            blocks = prepare_static_edges(
+            blocks, _ = prepare_static_edges(
                 build_csr_blocks(edges.select("src", "dst").withColumn("coef", F.lit(1.0)), n_buckets),
                 runner, keys="bucket", n_buckets=n_buckets, name_hint="walk_blocks",
             )
         else:
-            radj = prepare_static_edges(
+            radj, _ = prepare_static_edges(
                 ranked_adjacency(edges), runner, keys="src", mode=edges_mode, name_hint="walk_radj"
             )
-            degt = prepare_static_edges(
+            degt, _ = prepare_static_edges(
                 edges.groupBy("src").agg(F.count("*").alias("deg")),
                 runner, keys="src", mode=edges_mode, name_hint="walk_deg",
             )
@@ -245,8 +245,7 @@ def random_walks(
     walks = out[0]
     for df in out[1:]:
         walks = walks.unionByName(df)
-    runner.finalize()
-    return walks
+    return runner.finalize(walks)
 
 
 def sampled_adjacency(key_edges: DataFrame, fanout: int, seed: str = "ns") -> DataFrame:
@@ -401,23 +400,23 @@ def node2vec_walks(
         from essentials_spark.graph.csr_blocks import build_csr_blocks
 
         n_buckets = n_buckets or spark.sparkContext.defaultParallelism
-        blocks = prepare_static_edges(
+        blocks, _ = prepare_static_edges(
             build_csr_blocks(edges.select("src", "dst").withColumn("coef", F.lit(1.0)), n_buckets),
             runner, keys="bucket", n_buckets=n_buckets, name_hint="n2v_blocks",
         )
         radj = degt = None
     else:
         blocks = None
-        radj = prepare_static_edges(
+        radj, _ = prepare_static_edges(
             ranked_adjacency(edges), runner, keys="src", mode=edges_mode, name_hint="n2v_radj"
         )
-        degt = prepare_static_edges(
+        degt, _ = prepare_static_edges(
             edges.groupBy("src").agg(F.count("*").alias("deg")),
             runner, keys="src", mode=edges_mode, name_hint="n2v_deg",
         )
         # membership probe table (prev, dst) — the same edge set keyed
         # for the N(prev) test
-        member = prepare_static_edges(
+        member, _ = prepare_static_edges(
             edges.select(F.col("src").alias("mprev"), F.col("dst").alias("mdst"))
             .withColumn("is_common", F.lit(1)),
             runner, keys="mprev", mode=edges_mode, name_hint="n2v_member",
@@ -537,8 +536,7 @@ def node2vec_walks(
     walks = out[0]
     for df in out[1:]:
         walks = walks.unionByName(df)
-    runner.finalize()
-    return walks
+    return runner.finalize(walks)
 
 
 def temporal_neighbor_sample(

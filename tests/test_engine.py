@@ -1,6 +1,7 @@
 """Superstep runner: checkpoint/resume/metrics; ops primitives; skew."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from essentials_spark.algos import pagerank
@@ -447,3 +448,107 @@ def test_random_walks_sink_streams_per_step_and_resumes(spark, tmp_path):
     # surviving step dirs were not rewritten
     for d, t in mtimes.items():
         assert os.path.getmtime(os.path.join(d, "_SUCCESS")) == t
+
+
+# --- the runner-owned loop scope -------------------------------------
+
+_AQE = "spark.sql.adaptive.enabled"
+_PARTS = "spark.sql.shuffle.partitions"
+
+
+def _loop_conf(spark):
+    return spark.conf.get(_AQE), spark.conf.get(_PARTS)
+
+
+def test_loop_conf_restored_when_body_raises(spark):
+    runner = SuperstepRunner(spark, "loop_raise")
+    before = _loop_conf(spark)
+    with pytest.raises(RuntimeError):
+        with runner.loop(work_rows=100) as small:
+            assert small
+            assert _loop_conf(spark) == ("false", "1")
+            raise RuntimeError("superstep failed")
+    assert _loop_conf(spark) == before
+
+
+def test_loop_nested_scopes_keep_outer_conf(spark):
+    """Nested scopes with different sizes: the outermost small scope's
+    conf holds until that scope exits (serial single-writer use)."""
+    outer, inner = SuperstepRunner(spark, "outer"), SuperstepRunner(spark, "inner")
+    before = _loop_conf(spark)
+    with outer.loop(work_rows=100):
+        assert _loop_conf(spark) == ("false", "1")
+        with inner.loop(work_rows=300_000) as small:
+            assert small
+            assert _loop_conf(spark) == ("false", "1")
+        assert _loop_conf(spark) == ("false", "1")
+    assert _loop_conf(spark) == before
+
+
+def test_loop_unknown_size_leaves_conf_untouched(spark):
+    runner = SuperstepRunner(spark, "loop_none")
+    before = _loop_conf(spark)
+    assert before[0] == "true"
+    with runner.loop(work_rows=None) as small:
+        assert not small
+        assert _loop_conf(spark) == before
+    assert _loop_conf(spark) == before
+
+
+def test_static_table_rows_carried_from_write(spark):
+    from essentials_spark.engine.static_table import persist_bucketed, prepare_static_edges
+
+    df = spark.range(1234).select((F.col("id") % 37).alias("src"), F.col("id").alias("dst"))
+    st = persist_bucketed(df, "src", n_buckets=2, name_hint="rows")
+    try:
+        assert st.rows == st.df.count() == 1234
+    finally:
+        st.drop()
+    shuffled, rows = prepare_static_edges(df.filter(F.col("id") < 500), None, mode="shuffle")
+    assert rows == shuffled.count() == 500
+
+
+def test_finalize_returns_frames_that_outlive_dropped_tables(spark):
+    """A frame built on a runner-owned static table is still readable
+    after finalize(out) dropped the table — both a frame naming the
+    table in its plan and a lazily checkpointed iterate over it."""
+    from essentials_spark.engine.static_table import prepare_static_edges
+
+    df = spark.range(300).select((F.col("id") % 30).alias("src"), (F.col("id") % 7).alias("dst"))
+    expect = sorted((r["src"], r["n"]) for r in df.groupBy("src").agg(F.count("*").alias("n")).collect())
+
+    runner = SuperstepRunner(spark, "dangling")
+    edges, m = prepare_static_edges(df, runner, keys="src", n_buckets=2, name_hint="dangling")
+    assert m == 300
+    table = runner._owned_tables[0]
+    named = edges.groupBy("src").agg(F.count("*").alias("n")).persist()
+    out = runner.finalize(named)
+    assert not spark.catalog.tableExists(table)
+    assert sorted((r["src"], r["n"]) for r in out.collect()) == expect
+
+    runner = SuperstepRunner(spark, "dangling_lazy")
+    edges, _ = prepare_static_edges(df, runner, keys="src", n_buckets=2, name_hint="dangling")
+    lazy = runner.materialize(edges.groupBy("src").agg(F.count("*").alias("n")), 1)
+    out = runner.finalize(lazy.select("src", "n"))
+    assert sorted((r["src"], r["n"]) for r in out.collect()) == expect
+
+    runner = SuperstepRunner(spark, "dangling_none")
+    prepare_static_edges(df, runner, keys="src", n_buckets=2, name_hint="dangling")
+    untouched = spark.range(3)
+    assert runner.finalize(untouched) is untouched
+
+
+def test_cleanup_failures_are_recorded_and_later_cleanups_run(spark):
+    runner = SuperstepRunner(spark, "cleanup")
+    ran = []
+
+    def broken():
+        raise OSError("drop failed")
+
+    runner.defer(broken)
+    runner.defer(lambda: ran.append(1))
+    runner.finalize()
+    errors = [r for r in runner.metrics if "cleanup_error" in r]
+    assert len(errors) == 1 and errors[0]["cleanup"].endswith("broken")
+    assert errors[0]["cleanup_error"] == "OSError('drop failed')"
+    assert ran == [1]

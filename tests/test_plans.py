@@ -58,8 +58,8 @@ def test_prepare_static_edges_superstep_shuffles_state_only(spark):
         (F.col("id") % 80).alias("src"), (F.col("id") % 131).alias("dst")
     )
     runner = SuperstepRunner(spark, "plan_probe")
-    bucketed = prepare_static_edges(edges, runner, keys="src", mode="bucketed", n_buckets=4)
-    shuffled = prepare_static_edges(edges, None, keys="src", mode="shuffle")
+    bucketed, _ = prepare_static_edges(edges, runner, keys="src", mode="bucketed", n_buckets=4)
+    shuffled, _ = prepare_static_edges(edges, None, keys="src", mode="shuffle")
     state = spark.range(80).select(F.col("id").alias("src"), F.lit(1.0).alias("label"))
 
     def superstep(e):
@@ -287,3 +287,49 @@ def test_bpe_encode_no_shuffle(spark):
     docs = spark.createDataFrame([(0, "abab xy"), (1, "ab xy")], "doc_id long, text string")
     merges = bpe_train(docs, merges=2)
     assert count_exchanges(bpe_encode(docs, merges)) == 0
+
+
+def test_above_gate_loop_plans_keep_aqe_and_hints(spark, monkeypatch):
+    """Above the loop gate the scope is a no-op: a CC hash-min round and
+    a PageRank superstep planned inside runner.loop(m) keep AQE and
+    their hint_state_join broadcast. The env bound 0 puts a tiny graph
+    above the gate; with the default bound the same loop turns AQE off."""
+    from essentials_spark.engine.static_table import hint_state_join, prepare_static_edges
+    from essentials_spark.engine.superstep import SuperstepRunner
+
+    edges = spark.range(200).select(
+        (F.col("id") % 20).alias("src"), (F.col("id") % 13).alias("dst"), F.lit(0.1).alias("coef")
+    )
+    state = spark.range(20).select(
+        F.col("id").alias("vid"), F.col("id").alias("label"), F.lit(0.05).alias("rank")
+    )
+
+    def loop_plans() -> list[str]:
+        runner = SuperstepRunner(spark, "above_gate")
+        static, m = prepare_static_edges(edges, runner, keys="src", n_buckets=2, name_hint="gate")
+        try:
+            with runner.loop(work_rows=m):
+                src_state = state.withColumnRenamed("vid", "src")
+                contrib = (
+                    static.join(hint_state_join(src_state.select("src", "rank"), 20), "src")
+                    .groupBy("dst")
+                    .agg(F.sum(F.col("rank") * F.col("coef")).alias("contrib"))
+                )
+                pr_step = state.join(contrib.withColumnRenamed("dst", "vid"), "vid", "left")
+                cc_round = (
+                    static.join(hint_state_join(src_state.select("src", "label"), 20), "src")
+                    .groupBy("dst")
+                    .agg(F.min("label").alias("nbr_min"))
+                )
+                return [explain_str(pr_step), explain_str(cc_round)]
+        finally:
+            runner.finalize()
+
+    monkeypatch.setenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", "0")
+    for plan in loop_plans():
+        assert "AdaptiveSparkPlan" in plan
+        assert "BroadcastHashJoin" in plan
+    monkeypatch.delenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS")
+    for plan in loop_plans():
+        assert "AdaptiveSparkPlan" not in plan
+        assert "BroadcastHashJoin" in plan
