@@ -114,8 +114,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     kg = _keyed_graph(spark, sf_dir)
     # tol=0.0 -> exactly PR_ITERS supersteps (err < 0.0 is never true),
-    # matching the SQL oracle's unrolled iteration count; fused blocks
-    # only change action granularity, not the iterate sequence
+    # matching the SQL oracle's unrolled iteration count; fused_iters
+    # only sets the convergence-check cadence, not the iterate sequence
     ranks = pagerank(kg.graph, alpha=ALPHA, tol=0.0, max_iter=PR_ITERS, fused_iters=5)
     return ranks.join(kg.vkeys, "vid").select(
         "skey", F.round(F.col("rank") * 1e6).cast("long").alias("score_ppm")

@@ -104,7 +104,9 @@ def run_suite(
 
         # bucketed static-edge kernels are the defaults (engine/
         # static_table.py): the edge table is written once per run and
-        # supersteps shuffle only vertex state; fused blocks cut actions
+        # supersteps shuffle only vertex state; PageRank runs one action
+        # per superstep and fused_iters is only its convergence-check
+        # cadence (tol=0.0 here, so every run is pr_iters supersteps)
         t0 = time.perf_counter()
         pg.pagerank(tol=0.0, max_iter=pr_iters, fused_iters=5, persist_result=False).count()
         queries["pagerank"] = time.perf_counter() - t0

@@ -254,8 +254,10 @@ def cmd_plans(args) -> None:
     # run in (scoped AQE suppression + size-derived shuffle partitions
     # below the row bound; a no-op above it) so the artifact matches
     # what actually executes; the scope restores the conf on any exit
-    with SuperstepRunner(spark, "plans").loop(work_rows=m) as small:
-        # pagerank: one spread superstep over the prepared weighted table
+    with SuperstepRunner(spark, "plans").loop(work_rows=m):
+        # pagerank: one spread superstep over the prepared weighted table;
+        # the dangling sum enters as a literal collected with the previous
+        # superstep's error check (here 0.0: no in-plan aggregate)
         edges_w = pg.pr_st.df
         cur = kg.graph.vertices.select(
             "vid", F.lit(False).alias("dangling"), F.lit(1.0 / n).alias("rank")
@@ -265,29 +267,13 @@ def cmd_plans(args) -> None:
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("coef")).alias("contrib"))
         )
-        joined = cur.select("vid", "dangling", F.col("rank").alias("plast")).join(
+        step = cur.select("vid", "dangling", F.col("rank").alias("plast")).join(
             msgs.withColumnRenamed("dst", "vid"), "vid", "left"
+        ).select(
+            "vid", "dangling",
+            (F.lit((0.15 + 0.0) / float(n)) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
+            "plast",
         )
-        if small:
-            # fast-regime shape: the dangling sum enters as a literal
-            # collected with the previous superstep's error check — no
-            # in-plan 1-row aggregate, no broadcast-exchange job
-            step = joined.select(
-                "vid", "dangling",
-                (F.lit((0.15 + 0.0) / float(n)) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
-                "plast",
-            )
-        else:
-            dsum_df = cur.agg((F.lit(0.85) * F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(F.lit(0.0)))).alias("_dsum"))
-            step = (
-                joined
-                .crossJoin(F.broadcast(dsum_df))
-                .select(
-                    "vid", "dangling",
-                    ((F.lit(0.15) + F.col("_dsum")) / F.lit(float(n)) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
-                    "plast",
-                )
-            )
         dump("pagerank_superstep", step)
 
         # cc: one hash-min round (general shape) over the shared sym table

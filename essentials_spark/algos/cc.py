@@ -470,10 +470,7 @@ def _contract_phase23(
     if agg is not None:
         agg.unpersist()
     star.unpersist()
-    try:
-        labels2.unpersist()
-    except Exception:
-        pass
+    labels2.unpersist()
     return runner.finalize(out)
 
 
@@ -697,9 +694,12 @@ def connected_components(
             .select("vid", F.least("l1", "h_l1", "jump").alias("label"), "old")
         )
 
-    # clamp fused depth — see pagerank.py: unrolled-plan stats grow
-    # superlinearly with block depth and stall the planner (CC rounds
-    # reference their predecessor 3x, so the ceiling is lower)
+    # clamp fused depth: each unrolled round multiplies the logical
+    # plan and Catalyst's carried size stats grow superlinearly with
+    # block depth — measured on unrolled PageRank blocks (3 references
+    # per round): fused_iters=10 planning-stalled (>500 s) where 5 ran
+    # in 27 s at 3.3M vertices. CC rounds also reference their
+    # predecessor 3x; truncate_plan resets stats at every block boundary.
     fused_iters = min(fused_iters, 4)
     front_rows = n
     with runner.loop(work_rows=m):

@@ -410,8 +410,5 @@ def truss_decomposition(
             gl + 1, force=True, meta={"converged": True, "k": k},
         )
     for df in cleanup + pieces + [und, sup, deg]:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        df.unpersist()
     return runner.finalize(out)

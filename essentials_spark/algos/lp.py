@@ -255,7 +255,7 @@ def label_propagation(
             *(["par"] if semi else []),
         )
 
-    # clamp fused depth — see pagerank.py: unrolled-plan stats grow
+    # clamp fused depth — see cc.py: unrolled-plan stats grow
     # superlinearly with block depth and stall the planner past ~6
     fused_iters = min(fused_iters, 6)
     small_bound = (

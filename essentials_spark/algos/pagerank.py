@@ -75,6 +75,10 @@ def pagerank(
     correctness oracle). kernel='csr': spread as vectorized NumPy SpMV
     over packed per-bucket CSR blocks (graph/csr_blocks.py) — the
     vectorized path required by the north rule.
+    ``fused_iters``: the convergence-check cadence — every superstep
+    runs and is logged, but ``tol`` is tested only every
+    ``fused_iters``-th superstep (and at ``max_iter``), so the
+    iteration count is a multiple of it unless ``max_iter`` ends first.
     ``edge_rows``: the known row count of ``static_edges_w``.
     """
     spark = graph.edges.sparkSession
@@ -147,14 +151,13 @@ def pagerank(
         converged = bool(meta.get("converged"))
     ranks = ranks.persist()
 
-    def spread(cur, dsum_lit: float | None = None):
-        """One superstep as pure dataflow — the dangling mass term is a
-        1-row aggregate cross-joined in (no driver collect), so several
-        supersteps fuse into a single Spark job. ``dsum_lit`` (fast
-        regime): the dangling sum enters as a LITERAL collected from the
-        previous materialized state instead — the in-plan 1-row
-        aggregate costs a serial broadcast job per superstep, which at
-        gate scale is most of the wall (profiled round 7)."""
+    def spread(cur, dsum: float):
+        """One superstep (pr.hxx:134-152): ONE shuffle aggregate of
+        rank*coef messages joined back onto the state. The dangling sum
+        enters as a LITERAL collected with the previous superstep's
+        error check — an in-plan 1-row aggregate would cost a serial
+        broadcast job per superstep (profiled round 7: 29 broadcast
+        jobs, 7.8 of 8.7 s at sf0.1)."""
         if kernel == "csr":
             msgs = spmv_push(blocks, cur.select("vid", "rank"), n_buckets)
         else:
@@ -170,123 +173,54 @@ def pagerank(
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("coef")).alias("contrib"))
             )
-        joined = cur.select("vid", "dangling", F.col("rank").alias("plast")).join(
+        # the reference's arithmetic, evaluated driver-side:
+        # base = (1 - alpha + dsum) / n
+        base = (1.0 - alpha + dsum) / float(n)
+        return cur.select("vid", "dangling", F.col("rank").alias("plast")).join(
             msgs.withColumnRenamed("dst", "vid"), "vid", "left"
-        )
-        if dsum_lit is not None:
-            # same IEEE arithmetic as the in-plan branch, evaluated
-            # driver-side: base = (1 - alpha + dsum) / n
-            base = (1.0 - alpha + dsum_lit) / float(n)
-            return joined.select(
-                "vid",
-                "dangling",
-                (F.lit(base) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
-                "plast",
-            )
-        dsum_df = cur.agg(
-            (F.lit(alpha) * F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(F.lit(0.0)))).alias("_dsum")
-        )
-        return (
-            joined
-            .crossJoin(F.broadcast(dsum_df))
-            .select(
-                "vid",
-                "dangling",
-                (
-                    (F.lit(1.0 - alpha) + F.col("_dsum")) / F.lit(float(n))
-                    + F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-                "plast",
-            )
+        ).select(
+            "vid",
+            "dangling",
+            (F.lit(base) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias("rank"),
+            "plast",
         )
 
-    # fused-block depth is clamped: each unrolled superstep multiplies
-    # the logical plan (3 references to its predecessor) and Catalyst's
-    # carried size stats grow superlinearly with depth — measured:
-    # fused_iters=10 planning-stalls (>500 s) where 5 runs in 27 s at
-    # 3.3M vertices. 6 is a safe ceiling; truncate_plan resets stats at
-    # every block boundary.
-    fused_iters = min(fused_iters, 6)
-    # fast regime (a small loop, runner.loop's size gate): the
-    # fused block's in-plan dangling-sum broadcasts SERIALIZE — each
-    # superstep's 1-row aggregate is a separate broadcast job that must
-    # wait for its predecessor, so "one action per block" still pays
-    # 2 chained jobs per superstep (profiled: 29 broadcast jobs, 7.8 of
-    # 8.7 s at sf0.1). Here each superstep instead runs one action and
-    # ONE driver collect that returns the L-inf error AND the next
-    # superstep's dangling sum together; the scalar enters the next
-    # plan as a literal (identical IEEE arithmetic). Convergence is
-    # still only acted on at the fused-block cadence, so iteration
-    # counts — and therefore results — match the fused path exactly.
-    with runner.loop(work_rows=m) as fast:
-        if fast and not converged and iteration < max_iter:
-            k_cad = max(1, fused_iters)
-            dsum = float(
-                ranks.agg(
-                    (F.lit(alpha) * F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(F.lit(0.0)))).alias("d")
-                ).collect()[0]["d"]
-                or 0.0
-            )
-            while not converged and iteration < max_iter:
-                new_ranks = runner.materialize(spread(ranks, dsum_lit=dsum), iteration + 1)
-                row = new_ranks.agg(
-                    F.max(F.abs(F.col("rank") - F.col("plast"))).alias("err"),
-                    (F.lit(alpha) * F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(F.lit(0.0)))).alias("d"),
-                ).collect()[0]
-                err, dsum = row["err"], float(row["d"] or 0.0)
-                iteration += 1
-                runner.log(iteration, linf_err=err, edges_processed=m)
-                ranks.unpersist()
-                ranks = new_ranks.drop("plast").persist()
-                if (
-                    (iteration % k_cad == 0 or iteration >= max_iter)
-                    and err is not None
-                    and err < tol
-                ):
-                    prev = ranks
-                    ranks = runner.materialize(
-                        ranks, iteration, eager=True, force=True, meta={"converged": True}
-                    ).persist()
-                    prev.unpersist()
-                    converged = True
-                    break
+    # dsum = alpha * sum(rank over dangling vertices) (pr.hxx:124-133)
+    dangling_mass = (
+        F.lit(alpha) * F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(F.lit(0.0)))
+    ).alias("d")
+    # one superstep per loop turn, as the reference enactor: one action
+    # and ONE driver collect returning the L-inf error AND the next
+    # superstep's dangling sum. ``fused_iters`` is the convergence-check
+    # cadence: err < tol is acted on every fused_iters-th superstep (and
+    # at max_iter).
+    check_every = max(1, fused_iters)
+    with runner.loop(work_rows=m):
+        if not converged and iteration < max_iter:
+            dsum = float(ranks.agg(dangling_mass).collect()[0]["d"] or 0.0)
         while not converged and iteration < max_iter:
-            k = min(max(1, fused_iters), max_iter - iteration)
-            cur = ranks
-            intermediates = []
-            for j in range(k):
-                cur = spread(cur.drop("plast") if "plast" in cur.columns else cur)
-                # persist each NON-FINAL fused iterate: every superstep
-                # references its predecessor three times (messages, dangling
-                # sum, join left side) — unmaterialized, the block would
-                # recompute the base state 3^k times. persist() keeps the
-                # block a single driver action while deduplicating the
-                # shared subplans. The block's LAST iterate flows straight
-                # into materialize (single reference) — persisting it too
-                # writes a redundant n-scale cache copy (see algos/cc.py).
-                if j < k - 1:
-                    cur = cur.persist()
-                    intermediates.append(cur)
-            new_ranks = runner.materialize(cur, iteration + k)
-            err = new_ranks.agg(F.max(F.abs(F.col("rank") - F.col("plast"))).alias("err")).collect()[0]["err"]
-            for df in intermediates:  # only after the block is materialized
-                df.unpersist()
-            iteration += k
-            runner.log(iteration, linf_err=err, edges_processed=m * k)
+            new_ranks = runner.materialize(spread(ranks, dsum), iteration + 1)
+            row = new_ranks.agg(
+                F.max(F.abs(F.col("rank") - F.col("plast"))).alias("err"), dangling_mass
+            ).collect()[0]
+            err, dsum = row["err"], float(row["d"] or 0.0)
+            iteration += 1
+            runner.log(iteration, linf_err=err, edges_processed=m)
             ranks.unpersist()
             ranks = new_ranks.drop("plast").persist()
-            if err < tol:
-                # durable final write: a resumed run must return THIS state,
-                # not run an extra superstep past convergence. (With fused
-                # blocks, convergence is detected at block granularity —
-                # the L-inf check compares the block's last two iterates,
-                # the reference's stopping rule evaluated every k-th step.)
+            if (
+                (iteration % check_every == 0 or iteration >= max_iter)
+                and err is not None
+                and err < tol
+            ):
+                # durable final write: a resumed run must return THIS
+                # state, not run an extra superstep past convergence
                 prev = ranks
                 ranks = runner.materialize(
                     ranks, iteration, eager=True, force=True, meta={"converged": True}
                 ).persist()
                 prev.unpersist()  # superseded by the eager checkpoint
-                break
+                converged = True
 
     runner.log(iteration, converged=True, total_edges_processed=m * iteration)
     out = runner.finalize(ranks.select("vid", "rank"))

@@ -64,7 +64,7 @@ def triangle_count(
         graph.edges, symmetrize=True, dedup=True, drop_self_loops=True
     )
     # truncate derivation lineage: the wedge plan references this
-    # subtree several times (see pagerank.py note on stats planning)
+    # subtree several times (see engine/superstep.truncate_plan)
     sym = truncate_plan(edges.select("src", "dst"))
 
     deg = sym.groupBy("src").agg(F.count("*").alias("deg")).withColumnRenamed("src", "vid")

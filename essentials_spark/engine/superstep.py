@@ -10,10 +10,10 @@ becomes a driver-side Python loop where each superstep is one Spark
 job and convergence is a tiny aggregate collect. Algorithms say WHAT
 the loop is, the runner decides HOW:
 
-    edges, m = prepare_static_edges(...)     # rows carried from the write
-    with runner.loop(work_rows=m) as small:  # one scope, one size gate
+    edges, m = prepare_static_edges(...)  # rows carried from the write
+    with runner.loop(work_rows=m):        # one scope, one size gate
         while not converged: ...
-    return runner.finalize(out)              # out never reads a dropped table
+    return runner.finalize(out)           # out never reads a dropped table
 
 The module also owns the three concerns GPU loops never face but
 10^12-edge iteration chains must (SURVEY.md §7.3):
@@ -51,8 +51,8 @@ from essentials_spark.engine.static_table import (
 
 # --- the loop scope's size gate -------------------------------------
 # AQE re-optimizes the remaining plan at every shuffle/broadcast stage
-# boundary. A fused superstep block is a DEEP plan with many tiny
-# exchanges, every join already explicitly hinted from KNOWN row
+# boundary. A superstep (or a fused block of them) is a plan with many
+# tiny exchanges, every join already explicitly hinted from KNOWN row
 # counts (hint_state_join) against bucketed static layouts — there is
 # nothing left for AQE to decide, but its per-stage replanning is
 # driver CPU paid once per exchange per superstep. Measured (round 7,
@@ -95,19 +95,16 @@ def truncate_plan(df: DataFrame, eager: bool = True) -> DataFrame:
     becomes the bottleneck (observed: minutes of driver CPU inside
     SizeInBytesOnlyStatsPlanVisitor per superstep). Rebuilding the
     DataFrame over the already-materialized InternalRow RDD resets the
-    leaf stats to defaults with no extra computation or serde.
+    leaf stats to defaults with no extra computation or serde. If
+    that internal API moves this raises: a silent fallback to the plain
+    checkpoint would bring the planner stall back.
     """
     spark = df.sparkSession
-    ckpt = df.localCheckpoint(eager=eager)
-    try:
-        jdf = ckpt._jdf
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(fresh, ckpt.sparkSession)
-    except Exception:
-        # fall back to the plain checkpoint if the internal API moves
-        return ckpt
+    jdf = df.localCheckpoint(eager=eager)._jdf
+    fresh = spark._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().toRdd(), jdf.schema(), False
+    )
+    return DataFrame(fresh, spark)
 
 
 def edge_fingerprint(edges: DataFrame, cols: tuple[str, str] = ("src", "dst")) -> str:
@@ -168,8 +165,7 @@ class SuperstepRunner:
         otherwise localCheckpoint truncates lineage in memory (every
         iteration: plain persist between truncations measured slower —
         recompute on eviction + replanning outweigh the saved checkpoint
-        job). ``meta``
-        (e.g. {'converged': True, 'dsum': ...}) rides along with
+        job). ``meta`` (e.g. {'converged': True}) rides along with
         durable checkpoints and is handed back by :meth:`latest`.
         """
         if self.checkpoint_dir and (force or iteration % self.checkpoint_every == 0):
@@ -275,15 +271,14 @@ class SuperstepRunner:
 
     @contextmanager
     def loop(self, work_rows: int | None = None):
-        """The superstep loop scope: ``with runner.loop(work_rows=m) as
-        small:``, ``m`` the per-superstep edge-scale row bound (normally
-        a static table's carried ``rows``). Below the gate
+        """The superstep loop scope: ``with runner.loop(work_rows=m):``,
+        ``m`` the per-superstep edge-scale row bound (normally a static
+        table's carried ``rows``). Below the gate
         (:func:`_small_loop`) AQE is off and shuffle partitions are
         sized from the known work (static_table.adaptive_buckets — with
         AQE off nothing coalesces, and ~100-task jobs were 7.8 of 8.7 s
         of pagerank at sf0.1); above it, or for an unknown size, the
-        conf is untouched. Yields whether the loop is small (fixed job
-        latency dominates: trade plan fusion for fewer serial jobs).
+        conf is untouched.
 
         Reentrant: the outermost small scope's conf holds until it
         exits, on every exit path. Single-writer contract: the conf is
@@ -291,7 +286,7 @@ class SuperstepRunner:
         at a time (a concurrent query on another thread would run under
         this loop's conf)."""
         if not _small_loop(work_rows):
-            yield False
+            yield
             return
         spark, key = self.spark, id(self.spark)
         with _LOOP_LOCK:
@@ -303,7 +298,7 @@ class SuperstepRunner:
                 st = _LOOP_STATE[key] = [0, saved]
             st[0] += 1
         try:
-            yield True
+            yield
         finally:
             with _LOOP_LOCK:
                 st[0] -= 1

@@ -448,9 +448,9 @@ def test_prepared_graph_matches_standalone(spark, golden_tc_graph):
 
 
 def test_fused_iters_clamped_and_equivalent(spark, golden_tc_graph):
-    """Absurd fused_iters must neither hang the planner (clamped — an
-    unclamped 10-deep unroll planning-stalled at 3.3M vertices) nor
-    change results."""
+    """Absurd fused_iters must neither hang the planner nor change
+    results (PageRank runs one superstep per action; fused_iters is only
+    its convergence-check cadence)."""
     from essentials_spark.algos import pagerank
 
     g = golden_tc_graph

@@ -464,8 +464,7 @@ def test_loop_conf_restored_when_body_raises(spark):
     runner = SuperstepRunner(spark, "loop_raise")
     before = _loop_conf(spark)
     with pytest.raises(RuntimeError):
-        with runner.loop(work_rows=100) as small:
-            assert small
+        with runner.loop(work_rows=100):
             assert _loop_conf(spark) == ("false", "1")
             raise RuntimeError("superstep failed")
     assert _loop_conf(spark) == before
@@ -478,8 +477,7 @@ def test_loop_nested_scopes_keep_outer_conf(spark):
     before = _loop_conf(spark)
     with outer.loop(work_rows=100):
         assert _loop_conf(spark) == ("false", "1")
-        with inner.loop(work_rows=300_000) as small:
-            assert small
+        with inner.loop(work_rows=300_000):
             assert _loop_conf(spark) == ("false", "1")
         assert _loop_conf(spark) == ("false", "1")
     assert _loop_conf(spark) == before
@@ -489,10 +487,82 @@ def test_loop_unknown_size_leaves_conf_untouched(spark):
     runner = SuperstepRunner(spark, "loop_none")
     before = _loop_conf(spark)
     assert before[0] == "true"
-    with runner.loop(work_rows=None) as small:
-        assert not small
+    with runner.loop(work_rows=None):
         assert _loop_conf(spark) == before
     assert _loop_conf(spark) == before
+
+
+# --- one PageRank superstep regime on both sides of the loop gate ------
+
+# a directed graph with dangling vertices (0 and 4 have no out-edges);
+# at tol=1e-6 it converges after 7 supersteps, so a check cadence of 3
+# stops it at 9
+_PR_EDGES = [(1, 0), (1, 2), (2, 1), (2, 3), (3, 0), (3, 1), (3, 2), (3, 4)]
+_GATES = {"default_gate": None, "above_gate": "0"}
+
+
+def _pagerank_under_gate(spark, monkeypatch, gate, tmp_path, **kw):
+    """Run PageRank with the loop gate at its default or forced to 0
+    (every loop above it); returns (ranks by vid, runner)."""
+    if gate is None:
+        monkeypatch.delenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", gate)
+    g = graph_from_edges(spark, _PR_EDGES, directed=True, n_vertices=5)
+    runner = SuperstepRunner(spark, "pr", checkpoint_dir=str(tmp_path), checkpoint_every=3)
+    got = pagerank(g, runner=runner, **kw)
+    return np.array([r["rank"] for r in got.orderBy("vid").collect()]), runner
+
+
+@pytest.mark.parametrize("gate", list(_GATES.values()), ids=list(_GATES))
+def test_pagerank_checkpoints_and_logs_every_superstep(spark, tmp_path, monkeypatch, gate):
+    """Every superstep is materialized and logged on both sides of the
+    gate: the durable checkpoint contract and the per-iteration metrics
+    never depend on graph size (fused_iters is only the check cadence)."""
+    import os
+
+    from tests.oracles import pagerank_oracle
+
+    ranks, runner = _pagerank_under_gate(
+        spark, monkeypatch, gate, tmp_path, tol=0.0, max_iter=6, fused_iters=5
+    )
+    for it in (3, 6):
+        assert os.path.exists(os.path.join(str(tmp_path), "pr", f"iter={it:06d}", "_SUCCESS"))
+    assert len([r for r in runner.metrics if "linf_err" in r]) == 6
+    exp = pagerank_oracle(5, [(s, d, 1.0) for s, d in _PR_EDGES], tol=0.0, max_iter=6)
+    assert np.allclose(ranks, exp, atol=1e-9)
+
+
+def test_pagerank_identical_across_gates(spark, tmp_path, monkeypatch):
+    """Both sides of the gate run the same supersteps and check
+    convergence at the same cadence: equal ranks and final iteration."""
+    for name, kw, final_iter in (
+        ("fixed", dict(tol=0.0, max_iter=6, fused_iters=5), 6),
+        ("converge", dict(tol=1e-6, fused_iters=3), 9),
+    ):
+        (a, ra), (b, rb) = (
+            _pagerank_under_gate(spark, monkeypatch, gate, tmp_path / f"{name}_{label}", **kw)
+            for label, gate in _GATES.items()
+        )
+        assert np.allclose(a, b, atol=1e-12)
+        assert max(r["iteration"] for r in ra.metrics) == final_iter
+        assert max(r["iteration"] for r in rb.metrics) == final_iter
+
+
+def test_truncate_plan_resets_carried_stats(spark):
+    """Plain localCheckpoint carries the checkpointed plan's size
+    estimate (a few KB for range(1000)); truncate_plan must reset it to
+    the default, which is what keeps CC-style supersteps from squaring
+    it every iteration (a silent fallback to the plain checkpoint would
+    fail this)."""
+    from essentials_spark.engine.superstep import truncate_plan
+
+    def size(df):
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    assert size(spark.range(1000).localCheckpoint()) < default
+    assert size(truncate_plan(spark.range(1000))) == default
 
 
 def test_static_table_rows_carried_from_write(spark):
