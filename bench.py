@@ -112,9 +112,9 @@ def run_suite(
         queries["pagerank"] = time.perf_counter() - t0
         eps["pagerank"] = m * pr_iters / queries["pagerank"]
 
-        # CC stays unfused: its rounds reference the previous state three
-        # times (hash-min, hook, jump) and fusing multiplies that plan
-        # 3x/round — measured 4x slower at sf0.1 than one action per round
+        # CC runs one action per round: its rounds reference the previous
+        # state three times (hash-min, hook, jump), and fusing rounds
+        # multiplied that plan 3x/round — measured 4x slower at sf0.1
         runner = SuperstepRunner(spark, "bench_cc")
         t0 = time.perf_counter()
         pg.connected_components(runner=runner, persist_result=False).count()

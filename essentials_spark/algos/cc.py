@@ -22,10 +22,8 @@ operators/filter/bypass.hxx) — converged when nothing changes.
 
 Scale shape: the symmetrized edge table is persisted ONCE as a
 src-bucketed table (engine/static_table.py), so each superstep
-shuffles only the vertex-state side; ``fused_iters`` folds k rounds
-into one Spark action (the convergence count runs at block
-granularity), cutting per-superstep job overhead. Final labels are
-exact: min vid per component (canonical).
+shuffles only the vertex-state side. Final labels are exact: min vid
+per component (canonical).
 """
 
 from __future__ import annotations
@@ -480,7 +478,6 @@ def connected_components(
     runner: SuperstepRunner | None = None,
     pre_symmetrized: bool = False,
     edges_mode: str = "bucketed",
-    fused_iters: int = 1,
     persist_result: bool = True,
     kernel: str = "dataframe",
     n_buckets: int | None = None,
@@ -493,13 +490,16 @@ def connected_components(
     gather-scatter over packed per-bucket CSR blocks (graph/
     csr_blocks.csr_min_push — np.minimum.at ≙ the reference's
     atomic::min, mst.hxx:173-199); the hook/jump label algebra stays
-    dataframe-side either way, and small-frontier rounds always use the
-    broadcast shape. Same exact labels, different physical path for the
-    edge-scale step (A/B-tested).
+    dataframe-side either way, and above the loop gate small-frontier
+    rounds always use the broadcast shape. Same exact labels, different
+    physical path for the edge-scale step (A/B-tested).
 
-    ``small_round_max``: frontier row count below which the broadcast
-    round shape is used (default: the state-broadcast bound). Tests
-    pass 0 to force the general shape on toy graphs.
+    Round shape: below the loop gate (``runner.loop`` yields it) every
+    round takes the general shuffle shape: one action, plus one
+    broadcast job while the frontier is broadcast-scale. Above it, ``small_round_max`` is the frontier row count below which
+    the broadcast round shape is used (default: the state-broadcast
+    bound; 0 forces the general shape). Each superstep logs its
+    ``shape`` ("general" or "small") in ``runner.metrics``.
 
     ``persist_result=False`` drops the DataFrame-level cache pin on the
     final labels before returning: the data stays in the (eager)
@@ -694,22 +694,18 @@ def connected_components(
             .select("vid", F.least("l1", "h_l1", "jump").alias("label"), "old")
         )
 
-    # clamp fused depth: each unrolled round multiplies the logical
-    # plan and Catalyst's carried size stats grow superlinearly with
-    # block depth — measured on unrolled PageRank blocks (3 references
-    # per round): fused_iters=10 planning-stalled (>500 s) where 5 ran
-    # in 27 s at 3.3M vertices. CC rounds also reference their
-    # predecessor 3x; truncate_plan resets stats at every block boundary.
-    fused_iters = min(fused_iters, 4)
     front_rows = n
-    with runner.loop(work_rows=m):
+    with runner.loop(work_rows=m) as small:
         while not converged and iteration < max_iter:
-            # never fuse small (broadcast-shape) rounds: each references its
-            # predecessor through several broadcast branches, and nesting
-            # those blows up Catalyst's rendered plan tree (observed:
-            # explainString OOM at depth 3) while measuring slower at
-            # depth 2 anyway — the small round is already one cheap action
-            in_small_regime = front_rows is not None and front_rows < (
+            # below the loop gate (AQE off, shuffle partitions sized from
+            # the known work) every round takes the general shape: its
+            # state exchanges are shuffle stages of the round's one
+            # action, where small_round's six separate broadcasts are six
+            # serial jobs (traced events-sf0.01: 48 -> 16 CC jobs, 2 per
+            # round instead of 7-8). Above the gate the broadcast shape
+            # removes the full-state re-exchange of tiny tail frontiers
+            # (see small_round)
+            in_small_regime = not small and front_rows < (
                 STATE_BROADCAST_MAX_ROWS if small_round_max is None else small_round_max
             )
             if in_small_regime and front_rows and m >= broadcast_mass_cap:
@@ -718,36 +714,21 @@ def connected_components(
                 # (When the WHOLE edge table is under the cap the gate
                 # holds for any frontier — skip the per-round probe job.)
                 in_small_regime = frontier_msg_mass(frontier) < broadcast_mass_cap
-            k = 1 if in_small_regime else min(max(1, fused_iters), max_iter - iteration)
-            cur, front = labels, frontier
-            intermediates = []
-            for j in range(k):
-                # fused sub-rounds reuse the last KNOWN frontier count as a
-                # loose bound — the hint only picks broadcast vs
-                # shuffle_hash, so a stale-but-same-magnitude bound is fine
-                if in_small_regime:
-                    cur = small_round(cur.select("vid", "label"), front, intermediates)
-                else:
-                    cur = one_round(cur.select("vid", "label"), front, front_rows, intermediates)
-                # each NON-FINAL fused round references its predecessor
-                # several times (messages, hook, jump lookup) — persist
-                # keeps the block a single action while deduplicating the
-                # shared subplans. The block's LAST iterate flows straight
-                # into materialize (single reference): persisting it too
-                # just writes a redundant n-scale cache copy per round.
-                if j < k - 1:
-                    cur = cur.persist()
-                    intermediates.append(cur)
-                    front = cur.filter(F.col("label") != F.col("old")).select("vid", "label")
-            new_labels = runner.materialize(cur, iteration + k)
-            # convergence at block granularity: did the LAST fused round
-            # change anything? (earlier no-op rounds are idempotent)
+            persists: list = []
+            if in_small_regime:
+                cur = small_round(labels.select("vid", "label"), frontier, persists)
+            else:
+                cur = one_round(labels.select("vid", "label"), frontier, front_rows, persists)
+            iteration += 1
+            new_labels = runner.materialize(cur, iteration)
             changed = new_labels.filter(F.col("label") != F.col("old")).select("vid", "label")
             n_changed = changed.count()
-            for df in intermediates:
+            for df in persists:
                 df.unpersist()
-            iteration += k
-            runner.log(iteration, changed=n_changed, edges_processed=m * k)
+            runner.log(
+                iteration, changed=n_changed, edges_processed=m,
+                shape="small" if in_small_regime else "general",
+            )
             labels.unpersist()
             labels = new_labels.drop("old").persist()
             frontier = changed

@@ -213,7 +213,7 @@ def kcore_hindex(
             .select("vid", F.coalesce(F.col("h"), F.lit(0)).alias("c"), F.col("c").alias("old"))
         )
 
-    # fused blocks (depth clamp: see cc.py): k rounds per Spark action; the
+    # fused blocks (depth clamp: see lp.py): k rounds per Spark action; the
     # frontier-size hint inside a block is the last KNOWN count (stale
     # by <k rounds — only picks broadcast vs shuffle shape, never
     # affects values). h-index needs ~chain/2 rounds on conversation

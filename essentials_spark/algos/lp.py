@@ -255,8 +255,12 @@ def label_propagation(
             *(["par"] if semi else []),
         )
 
-    # clamp fused depth — see cc.py: unrolled-plan stats grow
-    # superlinearly with block depth and stall the planner past ~6
+    # clamp fused depth: each unrolled round multiplies the logical
+    # plan and Catalyst's carried size stats grow superlinearly with
+    # block depth — measured on unrolled PageRank blocks (3 references
+    # per round): fused_iters=10 planning-stalled (>500 s) where 5 ran
+    # in 27 s at 3.3M vertices. truncate_plan resets stats at every
+    # block boundary
     fused_iters = min(fused_iters, 6)
     small_bound = (
         STATE_BROADCAST_MAX_ROWS // 8 if small_round_max is None else small_round_max
@@ -306,9 +310,9 @@ def label_propagation(
             for j in range(k):
                 cur = one_round(cur.select(*state_cols), chg, front_rows, shape, rnd=iteration + j)
                 # last fused iterate flows straight into materialize —
-                # persisting it too writes a redundant n-scale cache copy
-                # (see algos/cc.py); non-final iterates are referenced by
-                # their successor (messages + join left side)
+                # persisting it too writes a redundant n-scale cache copy;
+                # non-final iterates are referenced by their successor
+                # (messages + join left side)
                 if j < k - 1:
                     cur = cur.persist()
                     intermediates.append(cur)

@@ -221,10 +221,7 @@ def minhash_dedup(
         Graph(vertices=vertices, edges=edges), persist_result=False
     )
     for df in caches:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        df.unpersist()
     return labels.select(
         F.col("vid").alias("id"),
         F.col("label").alias("cluster"),

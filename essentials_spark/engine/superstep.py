@@ -10,10 +10,10 @@ becomes a driver-side Python loop where each superstep is one Spark
 job and convergence is a tiny aggregate collect. Algorithms say WHAT
 the loop is, the runner decides HOW:
 
-    edges, m = prepare_static_edges(...)  # rows carried from the write
-    with runner.loop(work_rows=m):        # one scope, one size gate
+    edges, m = prepare_static_edges(...)     # rows carried from the write
+    with runner.loop(work_rows=m) as small:  # one scope, one size gate
         while not converged: ...
-    return runner.finalize(out)           # out never reads a dropped table
+    return runner.finalize(out)              # out never reads a dropped table
 
 The module also owns the three concerns GPU loops never face but
 10^12-edge iteration chains must (SURVEY.md §7.3):
@@ -193,10 +193,7 @@ class SuperstepRunner:
             import gc
 
             gc.collect()
-            try:
-                self.spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
+            self.spark.sparkContext._jvm.System.gc()
         return out
 
     def _ckpt_path(self, iteration: int) -> str:
@@ -271,14 +268,16 @@ class SuperstepRunner:
 
     @contextmanager
     def loop(self, work_rows: int | None = None):
-        """The superstep loop scope: ``with runner.loop(work_rows=m):``,
-        ``m`` the per-superstep edge-scale row bound (normally a static
-        table's carried ``rows``). Below the gate
+        """The superstep loop scope: ``with runner.loop(work_rows=m) as
+        small:``, ``m`` the per-superstep edge-scale row bound (normally
+        a static table's carried ``rows``). Below the gate
         (:func:`_small_loop`) AQE is off and shuffle partitions are
         sized from the known work (static_table.adaptive_buckets — with
         AQE off nothing coalesces, and ~100-task jobs were 7.8 of 8.7 s
         of pagerank at sf0.1); above it, or for an unknown size, the
-        conf is untouched.
+        conf is untouched. Yields the gate decision (True below it), so
+        an algorithm picks its round shape from the same gate instead of
+        re-deriving it or reading the AQE conf.
 
         Reentrant: the outermost small scope's conf holds until it
         exits, on every exit path. Single-writer contract: the conf is
@@ -286,7 +285,7 @@ class SuperstepRunner:
         at a time (a concurrent query on another thread would run under
         this loop's conf)."""
         if not _small_loop(work_rows):
-            yield
+            yield False
             return
         spark, key = self.spark, id(self.spark)
         with _LOOP_LOCK:
@@ -298,7 +297,7 @@ class SuperstepRunner:
                 st = _LOOP_STATE[key] = [0, saved]
             st[0] += 1
         try:
-            yield
+            yield True
         finally:
             with _LOOP_LOCK:
                 st[0] -= 1

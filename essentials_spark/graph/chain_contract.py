@@ -88,12 +88,8 @@ class ChainContraction:
 
     def release(self) -> None:
         for df in (self.super_edges, self.interior, self.terminals, self.chains):
-            if df is None:
-                continue
-            try:
+            if df is not None:
                 df.unpersist()
-            except Exception:
-                pass
 
 
 def _local_rank_kernel(pdf):

@@ -247,10 +247,7 @@ class GraphMaintenance:
         self.n_batches += 1
         e.unpersist()
         for df in olds:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+            df.unpersist()
 
     def run_available(self, in_path: str, checkpoint: str) -> None:
         """One availableNow pass: derive edges from new transcript

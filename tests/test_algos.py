@@ -184,16 +184,18 @@ def test_incremental_cc_update_fuzz(spark):
     assert out == {0: 0, 1: 1, 100: 0, 101: 0}
 
 
-def test_cc_small_round_path_fuzz_vs_union_find(spark):
+def test_cc_small_round_path_fuzz_vs_union_find(spark, monkeypatch):
     # pins the broadcast (small_round) shape specifically: its
     # pointer-jump lookup is restricted to keys from this round's
     # recv.cand ∪ hook.hmin, an invariant previously argued only in the
-    # docstring. Force small rounds from round 0 (small_round_max ≫ n)
+    # docstring. Force small rounds from round 0 (loop gate at 0, so the
+    # loop is above it, and small_round_max ≫ n)
     # on adversarial shuffled-id chains/trees — the worst case for a
     # restricted jump key set, since a stale non-root label must be
     # healed through hook[label] rather than the lookup — and compare
     # against a union-find oracle. Failure here means the hook/jump
     # algebra regressed.
+    monkeypatch.setenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", "0")
     rng = np.random.RandomState(1234)
     for trial in range(6):
         n = int(rng.randint(24, 64))

@@ -10,6 +10,17 @@ from essentials_spark.engine.superstep import SuperstepRunner
 from essentials_spark.ops import advance, batch_execute, filter_frontier, neighbor_reduce, uniquify
 from tests.conftest import graph_from_edges
 
+# the loop gate at its default (every toy loop below it) or forced to 0
+# (every loop above it)
+_GATES = {"default_gate": None, "above_gate": "0"}
+
+
+def _set_gate(monkeypatch, gate):
+    if gate is None:
+        monkeypatch.delenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", gate)
+
 
 def test_resume_after_convergence_is_identical(spark, tmp_path):
     g = graph_from_edges(spark, [(0, 1), (1, 2), (2, 0), (0, 3)], directed=True, n_vertices=4)
@@ -40,16 +51,19 @@ def test_resume_mid_run_reproduces(spark, tmp_path):
     assert np.allclose(a, b, atol=1e-12)
 
 
-def test_cc_resume_mid_run_exact(spark, tmp_path):
+@pytest.mark.parametrize("gate", list(_GATES.values()), ids=list(_GATES))
+def test_cc_resume_mid_run_exact(spark, tmp_path, monkeypatch, gate):
     """Kill CC after its first durable checkpoint: the resumed run
     restores labels and a full-set frontier (a safe superset — extra
     hash-min messages are no-ops) and must converge to identical
-    labels through the hybrid general/broadcast round shapes."""
+    labels, in the general round shape below the loop gate and the
+    hybrid general/broadcast shapes above it."""
     import glob
     import shutil
 
     from essentials_spark.algos import connected_components
 
+    _set_gate(monkeypatch, gate)
     pairs = [(i, i + 1) for i in range(25)] + [(40 + i, 40 + (i * 7 + 1) % 20) for i in range(20)]
     g = graph_from_edges(spark, pairs, n_vertices=60)
     ck = str(tmp_path / "ckcc")
@@ -62,6 +76,64 @@ def test_cc_resume_mid_run_exact(spark, tmp_path):
     r2 = SuperstepRunner(spark, "cc", checkpoint_dir=ck, checkpoint_every=2)
     b = {r["vid"]: r["label"] for r in connected_components(g, runner=r2).collect()}
     assert a == b
+
+
+def test_cc_round_shape_follows_loop_gate(spark, tmp_path, monkeypatch):
+    """Below the loop gate every CC superstep runs the general shuffle
+    shape: at most 2 Spark jobs (the frontier broadcast and the change
+    count that computes the lazy checkpoint), logged as shape
+    "general". With the gate at 0 the broadcast shape runs and is
+    logged as "small". Durable checkpoints land on every
+    checkpoint_every-th superstep, with one metrics row per superstep."""
+    import os
+
+    from essentials_spark.algos import connected_components
+    from tests.oracles import cc_oracle
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    group = "cc_round_shape"
+
+    class JobCounting(SuperstepRunner):
+        # the group's job count at each superstep's log row (the
+        # listener bus drained first, so every finished job is listed)
+        def log(self, iteration, **kv):
+            bus.waitUntilEmpty()
+            super().log(iteration, jobs=len(sc.statusTracker().getJobIdsForGroup(group)), **kv)
+
+    pairs = [(i, i + 1) for i in range(24)] + [(25 + i, 25 + (i * 7 + 1) % 15) for i in range(15)]
+    g = graph_from_edges(spark, pairs, n_vertices=40)
+    exp = {v: int(lab) for v, lab in enumerate(cc_oracle(40, pairs))}
+
+    def run(runner):
+        return {r["vid"]: r["label"] for r in connected_components(g, runner=runner).collect()}
+
+    _set_gate(monkeypatch, None)
+    sc.setJobGroup(group, "cc below the loop gate")
+    try:
+        runner = JobCounting(spark, "cc")
+        assert run(runner) == exp
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    rows = runner.metrics
+    assert len(rows) >= 3 and {r["shape"] for r in rows} == {"general"}
+    # superstep 1 also carries the setup jobs (static edges, vertex count)
+    per_step = [b["jobs"] - a["jobs"] for a, b in zip(rows, rows[1:])]
+    assert max(per_step) <= 2, per_step
+
+    ck = str(tmp_path / "ck")
+    runner = SuperstepRunner(spark, "cc", checkpoint_dir=ck, checkpoint_every=2)
+    assert run(runner) == exp
+    steps = [r["iteration"] for r in runner.metrics]
+    assert steps == list(range(1, len(steps) + 1))
+    for it in range(2, steps[-1] + 1, 2):
+        assert os.path.exists(os.path.join(ck, "cc", f"iter={it:06d}", "_SUCCESS"))
+
+    _set_gate(monkeypatch, "0")
+    runner = SuperstepRunner(spark, "cc_above")
+    assert run(runner) == exp
+    assert {r["shape"] for r in runner.metrics} == {"small"}
 
 
 def test_metrics_written(spark, tmp_path):
@@ -498,16 +570,12 @@ def test_loop_unknown_size_leaves_conf_untouched(spark):
 # at tol=1e-6 it converges after 7 supersteps, so a check cadence of 3
 # stops it at 9
 _PR_EDGES = [(1, 0), (1, 2), (2, 1), (2, 3), (3, 0), (3, 1), (3, 2), (3, 4)]
-_GATES = {"default_gate": None, "above_gate": "0"}
 
 
 def _pagerank_under_gate(spark, monkeypatch, gate, tmp_path, **kw):
     """Run PageRank with the loop gate at its default or forced to 0
     (every loop above it); returns (ranks by vid, runner)."""
-    if gate is None:
-        monkeypatch.delenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", raising=False)
-    else:
-        monkeypatch.setenv("SPARK_GRAFT_SUPERSTEP_AQE_MAX_ROWS", gate)
+    _set_gate(monkeypatch, gate)
     g = graph_from_edges(spark, _PR_EDGES, directed=True, n_vertices=5)
     runner = SuperstepRunner(spark, "pr", checkpoint_dir=str(tmp_path), checkpoint_every=3)
     got = pagerank(g, runner=runner, **kw)
